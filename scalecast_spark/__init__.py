@@ -13,6 +13,13 @@ instead of the reference's per-object pandas Series dict
 (reference: src/scalecast/Forecaster.py:44-94).
 """
 
+# first: Python workers unpickling any kernel/datapipe closure import
+# this package, which installs the per-task zip re-read guard for the
+# rest of that worker's life (see _worker.py)
+from scalecast_spark import _worker
+
+_worker.install()
+
 from scalecast_spark.session import get_session
 from scalecast_spark.frame import TimeSeriesFrame
 from scalecast_spark.forecaster import Forecaster

@@ -977,7 +977,15 @@ def cross_dedup(
     ``max_bucket_size`` lowest ids — the members are near-identical
     by construction (full-band agreement), so matching any retained
     member decides the new doc's fate. The new side is never capped:
-    every new doc needs its own keep/drop decision."""
+    every new doc needs its own keep/drop decision.
+
+    Memory: without ``existing_sigs``, the shared-shingle path caches
+    the EXISTING corpus's (id, shingle_array) projection under the
+    ``cross_arr_old`` scratch tag (MEMORY_AND_DISK; shingle arrays run
+    several times the size of the source text). That cache stays
+    resident after this call returns, until the next cross_dedup call
+    swaps it out or ``release_scratch_caches()`` drops it — call the
+    latter after a one-shot dedup against a large training set."""
 
     def _sigs(df: DataFrame, array_col: str | None = None) -> DataFrame:
         sh = word_shingles(

@@ -1292,12 +1292,7 @@ class Forecaster:
         # would be unreachable — unpersist it (the entry's consumers
         # recompute lazily if some external reference still reads it;
         # correctness unaffected, only recompute cost)
-        old = self._fused_caches.pop(name, None)
-        if old is not None:
-            try:
-                old.unpersist()
-            except Exception:
-                pass
+        self._release_fused(name)
         self._fused_caches[name] = salted
         test_df = None
         test_metrics: dict[str, float] | None = None
@@ -2516,13 +2511,26 @@ class Forecaster:
     def pop(self, *models: str) -> "Forecaster":
         for m in models:
             self.history.pop(m, None)
-            c = self._fused_caches.pop(m, None)
-            if c is not None:
-                try:
-                    c.unpersist()
-                except Exception:
-                    pass
+            self._release_fused(m)
         return self
+
+    def _release_fused(self, name: str) -> None:
+        """Unpersist this object's fused cache for ``name`` and drop its
+        ``fused::<name>`` registry entry — only while the entry still
+        holds THIS object's frame: another Forecaster that fit the same
+        nickname since owns the live entry and keeps it."""
+        from scalecast_spark.datapipe.dedup import _SCRATCH_CACHES
+
+        c = self._fused_caches.pop(name, None)
+        if c is None:
+            return
+        tag = f"fused::{name}"
+        if _SCRATCH_CACHES.get(tag) is c:
+            del _SCRATCH_CACHES[tag]
+        try:
+            c.unpersist()
+        except Exception:
+            pass
 
     def release_model_caches(self) -> "Forecaster":
         """Unpersist every fused-testfull cache banked by
@@ -2531,11 +2539,7 @@ class Forecaster:
         valid and lazily recompute if read again; only the pinned
         InMemoryRelations are dropped)."""
         for m in list(self._fused_caches):
-            c = self._fused_caches.pop(m)
-            try:
-                c.unpersist()
-            except Exception:
-                pass
+            self._release_fused(m)
         return self
 
 

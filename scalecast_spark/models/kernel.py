@@ -14,6 +14,15 @@ is any (X, y) → predict-callable — numpy OLS/ridge/lasso/kNN live in
 sklearn_like.py. Feature normalization (the reference's normalizer
 registry, cfg.py:67-73) is fit on train rows only and applied inside
 the same kernel (models.py:83,105's fit-on-train semantics).
+
+Every entry point (run_kernel, run_kernel_testfull, transfer_kernel,
+run_kernel_grid, run_kernel_cv, run_kernel_backtest) runs its horizon
+through ONE numpy recursion, :func:`_recurse`: the future feature rows
+arrive as a float array, the AR cells of each step's row are
+overwritten from the rolling history by column index, and the step's
+prediction (or the peeked actual) is appended to that history. Pandas
+slices each series once per fit; the per-step loop touches no pandas
+object, so a horizon step costs the model's predict and little else.
 """
 
 from __future__ import annotations
@@ -77,6 +86,85 @@ def _fit_normalizer(name: str | None, X: np.ndarray):
     raise ValueError(f"unknown normalizer {name!r}")
 
 
+def _peek_every(dynamic_testing: bool | int) -> int:
+    """dynamic_testing → peek period: True never peeks (0), False peeks
+    every step (1), an int k peeks every k-th step."""
+    return (
+        0 if dynamic_testing is True else 1 if dynamic_testing is False
+        else int(dynamic_testing)
+    )
+
+
+def _ar_columns(feat: list[str]) -> list[tuple[int, int]]:
+    """(AR lag, column index in ``feat``) pairs of the ``ar_<k>``
+    features — the cells the recursion overwrites from its history."""
+    ar_lags = {int(m.group(1)): c for c in feat for m in [_AR_RE.match(c)] if m}
+    return [
+        (k, j) for k, c in ar_lags.items()
+        for j, name in enumerate(feat) if name == c
+    ]
+
+
+def _design(frame: pd.DataFrame, feat: list[str]) -> np.ndarray:
+    return np.column_stack([frame[c].to_numpy(float) for c in feat])
+
+
+def _fit(fit_fn, normalizer, train: pd.DataFrame, feat: list[str]):
+    """Fit the normalizer and the model on ``train`` → (norm, predict)."""
+    Xtr = _design(train, feat)
+    norm = _fit_normalizer(normalizer, Xtr)
+    return norm, fit_fn(norm(Xtr), train[Y].to_numpy(float))
+
+
+def _recurse(
+    predict, norm, rows: np.ndarray, ar_cols: list[tuple[int, int]],
+    hist, actuals: np.ndarray, peek_every: int,
+) -> np.ndarray:
+    """The recursive horizon loop shared by every kernel entry point.
+
+    ``rows`` holds the future feature rows (float, one per step). Each
+    step's AR cells are ALWAYS overwritten from the rolling history: on
+    test-marked rows the frame carries true lagged actuals in ar_k
+    (features were built before the test split), and trusting them
+    would silently peek — recursion must see its own predictions
+    (reference models.py:145-147). The step's prediction joins the
+    history, or the true actual every ``peek_every``-th step when it
+    exists."""
+    hist = list(hist)
+    preds = np.empty(len(rows))
+    for s in range(len(rows)):
+        x = rows[s].copy()
+        for lag, j in ar_cols:
+            if lag <= len(hist):
+                x[j] = hist[-lag]
+        pred = float(predict(norm(x.reshape(1, -1))))
+        preds[s] = pred
+        actual = actuals[s]
+        if peek_every and (s + 1) % peek_every == 0 and not np.isnan(actual):
+            hist.append(float(actual))
+        else:
+            hist.append(pred)
+    return preds
+
+
+def _fitted_and_horizon(
+    pdf: pd.DataFrame, feat, ar_cols, predict, norm, hist, peek_every,
+) -> np.ndarray:
+    """Static fitted values on complete observed rows (actual AR cells)
+    and recursive predictions on the future rows of a DS-sorted frame."""
+    fitted = np.full(len(pdf), np.nan)
+    ok = (pdf[feat].notna().all(axis=1) & (pdf[IS_FUTURE] == 0)).to_numpy()
+    if ok.any():
+        fitted[ok] = predict(norm(_design(pdf.loc[ok], feat)))
+    fut = (pdf[IS_FUTURE] == 1).to_numpy()
+    if fut.any():
+        fitted[fut] = _recurse(
+            predict, norm, _design(pdf.loc[fut], feat), ar_cols, hist,
+            pdf.loc[fut, Y].to_numpy(float), peek_every,
+        )
+    return fitted
+
+
 def run_kernel(
     df: DataFrame,
     features: list[str],
@@ -87,12 +175,9 @@ def run_kernel(
     """Adds ``forecast``: fitted values on observed rows (actual AR
     cells), recursive dynamic predictions on future rows."""
     normalizer = _resolve_normalizer(normalizer)
-    ar_lags = {int(m.group(1)): c for c in features for m in [_AR_RE.match(c)] if m}
     feat = list(features)
-    peek_every = (
-        0 if dynamic_testing is True else 1 if dynamic_testing is False
-        else int(dynamic_testing)
-    )
+    ar_cols = _ar_columns(feat)
+    peek_every = _peek_every(dynamic_testing)
 
     schema = T.StructType(
         [
@@ -110,39 +195,11 @@ def run_kernel(
         if len(train) <= max(len(feat), 1):
             out["forecast"] = np.nan
             return out
-        Xtr = np.column_stack([train[c].to_numpy(float) for c in feat])
-        norm = _fit_normalizer(normalizer, Xtr)
-        predict = fit_fn(norm(Xtr), train[Y].to_numpy(float))
-
-        fitted = np.full(len(pdf), np.nan)
-        ok = (pdf[feat].notna().all(axis=1) & (pdf[IS_FUTURE] == 0)).to_numpy()
-        if ok.any():
-            Xall = np.column_stack(
-                [pdf.loc[ok, c].to_numpy(float) for c in feat]
-            )
-            fitted[ok] = predict(norm(Xall))
-
-        hist = list(obs[Y].to_numpy(float))
-        fut_idx = pdf.index[pdf[IS_FUTURE] == 1].tolist()
-        for step, i in enumerate(fut_idx, start=1):
-            row = pdf.loc[i, feat].copy()
-            # ALWAYS overwrite AR cells from the rolling history: on
-            # test-marked rows the frame carries true lagged actuals in
-            # ar_k (features were built before the test split), and
-            # trusting them would silently peek — recursion must see
-            # its own predictions (reference models.py:145-147)
-            for k, cname in ar_lags.items():
-                if k <= len(hist):
-                    row[cname] = hist[-k]
-            x = norm(row.to_numpy(float).reshape(1, -1))
-            pred = float(predict(x))
-            fitted[i] = pred
-            actual = pdf.at[i, Y]
-            if peek_every and step % peek_every == 0 and not pd.isna(actual):
-                hist.append(float(actual))
-            else:
-                hist.append(pred)
-        out["forecast"] = fitted
+        norm, predict = _fit(fit_fn, normalizer, train, feat)
+        out["forecast"] = _fitted_and_horizon(
+            pdf, feat, ar_cols, predict, norm, obs[Y].to_numpy(float),
+            peek_every,
+        )
         return out
 
     preds = (
@@ -182,12 +239,9 @@ def run_kernel_testfull(
     ``_arm='full'`` rows cover every input row (fitted + horizon).
     """
     normalizer = _resolve_normalizer(normalizer)
-    ar_lags = {int(m.group(1)): c for c in features for m in [_AR_RE.match(c)] if m}
     feat = list(features)
-    peek_every = (
-        0 if dynamic_testing is True else 1 if dynamic_testing is False
-        else int(dynamic_testing)
-    )
+    ar_cols = _ar_columns(feat)
+    peek_every = _peek_every(dynamic_testing)
 
     schema = T.StructType(
         [
@@ -200,25 +254,6 @@ def run_kernel_testfull(
         ]
     )
 
-    def _recurse(predict, norm, hist, fut_rows, fut_actuals):
-        """run_kernel's recursive horizon loop, shared by both arms:
-        AR cells always overwritten from the rolling history; peek the
-        true actual every ``peek_every`` steps when it exists."""
-        preds = []
-        for step in range(1, len(fut_rows) + 1):
-            row = fut_rows.iloc[step - 1].copy()
-            for k, cname in ar_lags.items():
-                if k <= len(hist):
-                    row[cname] = hist[-k]
-            pred = float(predict(norm(row.to_numpy(float).reshape(1, -1))))
-            preds.append(pred)
-            actual = fut_actuals[step - 1]
-            if peek_every and step % peek_every == 0 and not pd.isna(actual):
-                hist.append(float(actual))
-            else:
-                hist.append(pred)
-        return preds
-
     def fit_predict(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(DS).reset_index(drop=True)
         obs = pdf[pdf[IS_FUTURE] == 0]
@@ -230,27 +265,11 @@ def run_kernel_testfull(
         if len(train) <= max(len(feat), 1):
             out["forecast"] = np.nan
         else:
-            Xtr = np.column_stack([train[c].to_numpy(float) for c in feat])
-            norm = _fit_normalizer(normalizer, Xtr)
-            predict = fit_fn(norm(Xtr), train[Y].to_numpy(float))
-            fitted = np.full(len(pdf), np.nan)
-            ok = (
-                pdf[feat].notna().all(axis=1) & (pdf[IS_FUTURE] == 0)
-            ).to_numpy()
-            if ok.any():
-                Xall = np.column_stack(
-                    [pdf.loc[ok, c].to_numpy(float) for c in feat]
-                )
-                fitted[ok] = predict(norm(Xall))
-            hist = list(obs[Y].to_numpy(float))
-            fut_idx = pdf.index[pdf[IS_FUTURE] == 1].tolist()
-            if fut_idx:
-                fitted[fut_idx] = _recurse(
-                    predict, norm, hist,
-                    pdf.loc[fut_idx, feat],
-                    pdf.loc[fut_idx, Y].to_numpy(),
-                )
-            out["forecast"] = fitted
+            norm, predict = _fit(fit_fn, normalizer, train, feat)
+            out["forecast"] = _fitted_and_horizon(
+                pdf, feat, ar_cols, predict, norm, obs[Y].to_numpy(float),
+                peek_every,
+            )
         out["_arm"] = "full"
         outs.append(out)
 
@@ -268,14 +287,11 @@ def run_kernel_testfull(
             if len(train_t) <= max(len(feat), 1):
                 t_out["forecast"] = np.nan
             else:
-                Xtr_t = np.column_stack(
-                    [train_t[c].to_numpy(float) for c in feat]
-                )
-                norm_t = _fit_normalizer(normalizer, Xtr_t)
-                predict_t = fit_fn(norm_t(Xtr_t), train_t[Y].to_numpy(float))
+                norm_t, predict_t = _fit(fit_fn, normalizer, train_t, feat)
                 t_out["forecast"] = _recurse(
-                    predict_t, norm_t, list(pre[Y].to_numpy(float)),
-                    hold[feat], hold[Y].to_numpy(),
+                    predict_t, norm_t, _design(hold, feat), ar_cols,
+                    pre[Y].to_numpy(float), hold[Y].to_numpy(float),
+                    peek_every,
                 )
             t_out["_arm"] = "test"
             outs.append(t_out)
@@ -314,12 +330,9 @@ def transfer_kernel(
     the SRC rows. Dst series with no src twin forecast NaN — there is
     no model to transfer. Adds ``forecast`` to ``dst_df``."""
     normalizer = _resolve_normalizer(normalizer)
-    ar_lags = {int(m.group(1)): c for c in features for m in [_AR_RE.match(c)] if m}
     feat = list(features)
-    peek_every = (
-        0 if dynamic_testing is True else 1 if dynamic_testing is False
-        else int(dynamic_testing)
-    )
+    ar_cols = _ar_columns(feat)
+    peek_every = _peek_every(dynamic_testing)
     schema = T.StructType(
         [
             T.StructField(SERIES, dst_df.schema[SERIES].dataType),
@@ -339,36 +352,11 @@ def transfer_kernel(
         if len(train) <= max(len(feat), 1):
             out["forecast"] = np.nan
             return out
-        train = train.sort_values(DS)
-        Xtr = np.column_stack([train[c].to_numpy(float) for c in feat])
-        norm = _fit_normalizer(normalizer, Xtr)
-        predict = fit_fn(norm(Xtr), train[Y].to_numpy(float))
-
-        fitted = np.full(len(pdf), np.nan)
-        ok = (pdf[feat].notna().all(axis=1) & (pdf[IS_FUTURE] == 0)).to_numpy()
-        if ok.any():
-            Xall = np.column_stack(
-                [pdf.loc[ok, c].to_numpy(float) for c in feat]
-            )
-            fitted[ok] = predict(norm(Xall))
-
-        obs = pdf[pdf[IS_FUTURE] == 0]
-        hist = list(obs[Y].to_numpy(float))
-        fut_idx = pdf.index[pdf[IS_FUTURE] == 1].tolist()
-        for step, i in enumerate(fut_idx, start=1):
-            row = pdf.loc[i, feat].copy()
-            for k, cname in ar_lags.items():
-                if k <= len(hist):
-                    row[cname] = hist[-k]
-            x = norm(row.to_numpy(float).reshape(1, -1))
-            pred = float(predict(x))
-            fitted[i] = pred
-            actual = pdf.at[i, Y]
-            if peek_every and step % peek_every == 0 and not pd.isna(actual):
-                hist.append(float(actual))
-            else:
-                hist.append(pred)
-        out["forecast"] = fitted
+        norm, predict = _fit(fit_fn, normalizer, train.sort_values(DS), feat)
+        out["forecast"] = _fitted_and_horizon(
+            pdf, feat, ar_cols, predict, norm,
+            pdf.loc[pdf[IS_FUTURE] == 0, Y].to_numpy(float), peek_every,
+        )
         return out
 
     cols = [SERIES, DS, IS_FUTURE, Y, *feat]
@@ -403,15 +391,11 @@ def run_kernel_grid(
     fit-on-train normalizers, same recursive AR overwrite.
     """
     cells = [
-        (fn, _resolve_normalizer(nz), dt) for fn, nz, dt in cells
+        (fn, _resolve_normalizer(nz), default_dynamic if dt is None else dt)
+        for fn, nz, dt in cells
     ]
-    ar_lags = {int(m.group(1)): c for c in features for m in [_AR_RE.match(c)] if m}
     feat = list(features)
-
-    def _peek(dyn) -> int:
-        if dyn is None:
-            dyn = default_dynamic
-        return 0 if dyn is True else 1 if dyn is False else int(dyn)
+    ar_cols = _ar_columns(feat)
 
     schema = T.StructType(
         [
@@ -439,32 +423,20 @@ def run_kernel_grid(
             return pd.concat(outs, ignore_index=True)[
                 [SERIES, DS, "_cell", Y, "forecast"]
             ]
-        Xtr = np.column_stack([train[c].to_numpy(float) for c in feat])
+        Xtr = _design(train, feat)
         ytr = train[Y].to_numpy(float)
-        hist0 = list(obs[Y].to_numpy(float))
-        fut_rows = pdf.loc[fut_idx, feat]
-        fut_actuals = pdf.loc[fut_idx, Y].to_numpy()
+        hist0 = obs[Y].to_numpy(float)
+        fut_rows = _design(pdf.loc[fut_idx], feat)
+        fut_actuals = pdf.loc[fut_idx, Y].to_numpy(float)
         for ci, (fit_fn, normalizer, dyn) in enumerate(cells):
             norm = _fit_normalizer(normalizer, Xtr)
             predict = fit_fn(norm(Xtr), ytr)
-            peek_every = _peek(dyn)
-            hist = list(hist0)
-            preds = []
-            for step, i in enumerate(fut_idx, start=1):
-                row = fut_rows.loc[i].copy()
-                for k, cname in ar_lags.items():
-                    if k <= len(hist):
-                        row[cname] = hist[-k]
-                pred = float(predict(norm(row.to_numpy(float).reshape(1, -1))))
-                preds.append(pred)
-                actual = fut_actuals[step - 1]
-                if peek_every and step % peek_every == 0 and not pd.isna(actual):
-                    hist.append(float(actual))
-                else:
-                    hist.append(pred)
             o = base.copy()
             o["_cell"] = ci
-            o["forecast"] = preds
+            o["forecast"] = _recurse(
+                predict, norm, fut_rows, ar_cols, hist0, fut_actuals,
+                _peek_every(dyn),
+            )
             outs.append(o)
         return pd.concat(outs, ignore_index=True)[
             [SERIES, DS, "_cell", Y, "forecast"]
@@ -518,10 +490,11 @@ def run_kernel_cv(
     numpy fits run, just in different tasks.
     """
     cells = [
-        (fn, _resolve_normalizer(nz), dt) for fn, nz, dt in cells
+        (fn, _resolve_normalizer(nz), default_dynamic if dt is None else dt)
+        for fn, nz, dt in cells
     ]
-    ar_lags = {int(m.group(1)): c for c in features for m in [_AR_RE.match(c)] if m}
     feat = list(features)
+    ar_cols = _ar_columns(feat)
 
     n_cells = len(cells)
     fold_split = False
@@ -544,11 +517,6 @@ def run_kernel_cv(
         "chunk_count": chunk_count,
         "replication": (k if fold_split else 1) * chunk_count,
     }
-
-    def _peek(dyn) -> int:
-        if dyn is None:
-            dyn = default_dynamic
-        return 0 if dyn is True else 1 if dyn is False else int(dyn)
 
     schema = T.StructType(
         [
@@ -603,11 +571,11 @@ def run_kernel_cv(
                     o["forecast"] = np.nan
                     outs.append(o)
                 continue
-            Xtr = np.column_stack([train[c].to_numpy(float) for c in feat])
+            Xtr = _design(train, feat)
             ytr = train[Y].to_numpy(float)
-            hist0 = list(obs[Y].to_numpy(float))
-            fut_rows = hold[feat]
-            fut_actuals = hold[Y].to_numpy()
+            hist0 = obs[Y].to_numpy(float)
+            fut_rows = _design(hold, feat)
+            fut_actuals = hold[Y].to_numpy(float)
             for ci, (fit_fn, normalizer, dyn) in my_cells:
                 # per-cell failure tolerance: a raising fit (singular
                 # design, k-NN with too few rows, ...) scores THIS
@@ -616,26 +584,10 @@ def run_kernel_cv(
                 try:
                     norm = _fit_normalizer(normalizer, Xtr)
                     predict = fit_fn(norm(Xtr), ytr)
-                    peek_every = _peek(dyn)
-                    hist = list(hist0)
-                    preds = []
-                    for step in range(1, len(hold) + 1):
-                        row = fut_rows.iloc[step - 1].copy()
-                        for lag, cname in ar_lags.items():
-                            if lag <= len(hist):
-                                row[cname] = hist[-lag]
-                        pred = float(
-                            predict(norm(row.to_numpy(float).reshape(1, -1)))
-                        )
-                        preds.append(pred)
-                        actual = fut_actuals[step - 1]
-                        if (
-                            peek_every and step % peek_every == 0
-                            and not pd.isna(actual)
-                        ):
-                            hist.append(float(actual))
-                        else:
-                            hist.append(pred)
+                    preds = _recurse(
+                        predict, norm, fut_rows, ar_cols, hist0,
+                        fut_actuals, _peek_every(dyn),
+                    )
                 except Exception:
                     preds = [np.nan] * len(hold)
                 o = base.copy()
@@ -692,12 +644,9 @@ def run_kernel_backtest(
     held-out rows only.
     """
     normalizer = _resolve_normalizer(normalizer)
-    ar_lags = {int(m.group(1)): c for c in features for m in [_AR_RE.match(c)] if m}
     feat = list(features)
-    peek_every = (
-        0 if dynamic_testing is True else 1 if dynamic_testing is False
-        else int(dynamic_testing)
-    )
+    ar_cols = _ar_columns(feat)
+    peek_every = _peek_every(dynamic_testing)
 
     schema = T.StructType(
         [
@@ -731,24 +680,12 @@ def run_kernel_backtest(
                 o["forecast"] = np.nan
                 outs.append(o)
                 continue
-            Xtr = np.column_stack([train[c].to_numpy(float) for c in feat])
-            norm = _fit_normalizer(normalizer, Xtr)
-            predict = fit_fn(norm(Xtr), train[Y].to_numpy(float))
-            hist = list(train_all[Y].to_numpy(float))
-            preds = []
-            for step in range(1, len(hold_rows) + 1):
-                row = hold_rows.iloc[step - 1][feat].copy()
-                for k, cname in ar_lags.items():
-                    if k <= len(hist):
-                        row[cname] = hist[-k]
-                pred = float(predict(norm(row.to_numpy(float).reshape(1, -1))))
-                preds.append(pred)
-                actual = hold_rows.iloc[step - 1][Y]
-                if peek_every and step % peek_every == 0 and not pd.isna(actual):
-                    hist.append(float(actual))
-                else:
-                    hist.append(pred)
-            o["forecast"] = preds
+            norm, predict = _fit(fit_fn, normalizer, train, feat)
+            o["forecast"] = _recurse(
+                predict, norm, _design(hold_rows, feat), ar_cols,
+                train_all[Y].to_numpy(float), hold_rows[Y].to_numpy(float),
+                peek_every,
+            )
             outs.append(o)
         if not outs:
             return pd.DataFrame(

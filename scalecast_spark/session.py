@@ -25,7 +25,7 @@ def get_session(app_name: str = "scalecast_spark", shuffle_partitions: int | Non
     # default heap is 1g — 32 concurrent tasks on 1g is a GC collapse
     # (observed: GCLocker retry storms on array-heavy stages). On a
     # real cluster spark-submit sets executor memory instead.
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _local_driver_mem()
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.driver.memory", driver_mem)
@@ -47,3 +47,20 @@ def get_session(app_name: str = "scalecast_spark", shuffle_partitions: int | Non
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _local_driver_mem() -> str:
+    """Default driver heap: 16g, capped at 60% of physical RAM.
+
+    With a max heap as large as the host's RAM, the JVM keeps growing
+    its heap instead of collecting harder, so a long-lived local session
+    (a test suite that caches many frames) grows the JVM until the
+    kernel OOM-kills it; every later call then fails with
+    ConnectionRefusedError on the gateway. The rest of RAM stays for
+    the JVM's off-heap memory (the full test suite peaked at ~2 GB
+    resident above a 9.6 GB heap), the Python driver and the workers."""
+    try:
+        ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    except (ValueError, OSError, AttributeError):
+        return "16g"
+    return f"{max(1024, min(16384, int(ram_mb * 0.6)))}m"

@@ -137,6 +137,53 @@ def test_fused_cache_pop_releases(spark, sf_dir):
     assert _n_persistent(spark) == before - 1
 
 
+
+def _fused_forecaster(spark, sf_dir, name):
+    from __spark_entry__ import _series
+
+    from scalecast_spark.forecaster import Forecaster
+
+    f = Forecaster(_series(spark, sf_dir), future_dates=7)
+    f.set_test_length(7)
+    f.add_ar_terms(3)
+    f.set_estimator("mlr")
+    f.manual_forecast(call_me=name)
+    return f
+
+
+def test_fused_release_drops_own_registry_entry(spark, sf_dir):
+    """pop() and release_model_caches() drop the fused::<name> registry
+    entry along with the cache, so a released nickname pins nothing."""
+    from scalecast_spark.datapipe.dedup import _SCRATCH_CACHES
+
+    f = _fused_forecaster(spark, sf_dir, "reg_pop")
+    assert _SCRATCH_CACHES["fused::reg_pop"] is f._fused_caches["reg_pop"]
+    f.pop("reg_pop")
+    assert "fused::reg_pop" not in _SCRATCH_CACHES
+
+    f = _fused_forecaster(spark, sf_dir, "reg_rel")
+    assert "fused::reg_rel" in _SCRATCH_CACHES
+    f.release_model_caches()
+    assert "fused::reg_rel" not in _SCRATCH_CACHES
+
+
+def test_fused_release_keeps_other_forecasters_entry(spark, sf_dir):
+    """Releasing one Forecaster never evicts another's live entry under
+    the same nickname."""
+    from scalecast_spark.datapipe.dedup import _SCRATCH_CACHES
+
+    a = _fused_forecaster(spark, sf_dir, "reg_shared")
+    b = _fused_forecaster(spark, sf_dir, "reg_shared")
+    live = b._fused_caches["reg_shared"]
+    assert _SCRATCH_CACHES["fused::reg_shared"] is live
+    a.pop("reg_shared")
+    a.release_model_caches()
+    assert _SCRATCH_CACHES["fused::reg_shared"] is live
+    assert live.storageLevel.useMemory
+    b.release_model_caches()
+    assert "fused::reg_shared" not in _SCRATCH_CACHES
+
+
 @pytest.mark.parametrize("with_sigs", [False, True])
 def test_cross_dedup_shared_shingles_twin_exact(
     spark, sf_dir, with_sigs, monkeypatch
