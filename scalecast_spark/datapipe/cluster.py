@@ -81,18 +81,13 @@ def kmeans_embeddings(
     dim = len(cents[0][1])
     if vectorized is None:
         vectorized = k * dim >= vectorized_threshold
-    # Optimization round 15 (guide §1.2): the iteration loop re-scanned
-    # the source once per iteration; cache the pruned vector projection
-    # for the loop's duration only — unpersisted before return, so a
-    # later invocation can never reuse it (the source plan carries no
-    # per-call token, unlike the Arrow kernels' closures).
-    import os
-
+    # the vectorized loop would re-scan the source once per iteration;
+    # cache the pruned vector projection for the loop's duration only —
+    # unpersisted before return, so a later invocation can never reuse
+    # it (the source plan carries no per-call token, unlike the Arrow
+    # kernels' closures).
     vec_src = df.select(vec_col) if vectorized else df
-    loop_cached = (
-        vectorized and n_iter > 1
-        and os.environ.get("SPARK_GRAFT_KMEANS_LOOP_CACHE", "1") != "0"
-    )
+    loop_cached = vectorized and n_iter > 1
     if loop_cached:
         vec_src.cache()
     try:

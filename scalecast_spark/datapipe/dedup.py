@@ -532,9 +532,17 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits:
     bits; sum (+1/-1) per bit position across words; sign →
     fingerprint bit.
 
-    Implemented with array expressions (no Python UDF): explode words,
-    per-bit contribution via bit arithmetic on the md5's first 15 hex
-    chars. The effective cap is 60 because ``conv`` of 16 hex chars can
+    Tokenization stays in the JVM (identical normalize/split/distinct
+    byte semantics — Python str.lower/\\s+ differ from Spark's for
+    exotic unicode); ONE Arrow kernel per task then does md5 + bit
+    counting + sign per doc, with no explode, no wide aggregate and no
+    shuffle beyond the compute-spreading repartition. Each word's hash
+    is the md5's first 15 hex chars (``int(hex[:15], 16)`` IS Spark's
+    ``conv(_, 16, 10)``), so fingerprints are integer-exact against
+    the same bit arithmetic replayed in SQL. A doc with no non-empty
+    words has no fingerprint and no output row.
+
+    The effective cap is 60 because ``conv`` of 16 hex chars can
     overflow a signed long; 61-64 are accepted for back-compat with the
     old bits=64 default and CLAMP to 60 with a warning; >64 raises.
     """
@@ -554,113 +562,64 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits:
             stacklevel=2,
         )
         bits = 60
-    import os
+    import pyarrow as pa
+    from pyspark.sql import types as T
 
-    nbits = bits
-    if os.environ.get("SPARK_GRAFT_SIMHASH_ARROW", "1") != "0":
-        # Optimization round 15 (guide §4.2): the fingerprint is a pure
-        # PER-ROW function, but the expression form paid an explode +
-        # a 60-column conditional-sum aggregate + its codegen compile
-        # per invocation. Tokenization stays in the JVM (identical
-        # normalize/split/distinct byte semantics — Python str.lower/
-        # \s+ differ from Spark's for exotic unicode), and ONE Arrow
-        # kernel does md5 + bit counting + sign per doc: no explode, no
-        # wide aggregate, no shuffle beyond the compute-spreading
-        # repartition. Bit-exact: hashlib.md5 over the Arrow UTF-8
-        # bytes IS Spark's md5, int(hex[:15], 16) IS conv(_,16,10), and
-        # the per-bit +1/-1 sums are integer arithmetic (pinned by
-        # tests/test_round15_opt.py against the expression form).
-        import pyarrow as pa
-        from pyspark.sql import types as T
-
-        words_arr = F.array_distinct(
-            F.split(normalize_text(F.col(text_col)), " ")
-        )
-        base = df.repartition(_spread(df), F.col(id_col)).select(
-            id_col, words_arr.alias("_ws")
-        )
-        schema = T.StructType(
-            [df.schema[id_col], T.StructField("simhash", T.LongType())]
-        )
-
-        def fingerprint(batches):
-            import hashlib
-
-            import numpy as np
-
-            memo: dict = {}  # word -> 60-bit hash; words repeat zipfian
-            bitpos = np.arange(nbits, dtype=np.int64)
-
-            def word_hash(w):
-                h = memo.get(w)
-                if h is None:
-                    h = int(
-                        hashlib.md5(w.encode("utf-8")).hexdigest()[:15], 16
-                    )
-                    memo[w] = h
-                return h
-
-            for batch in batches:
-                n = batch.num_rows
-                if n == 0:
-                    continue
-                ids = batch.column(0)
-                ws = batch.column(1).to_pylist()
-                keep, fps = [], []
-                for r in range(n):
-                    hs = [word_hash(w) for w in (ws[r] or ()) if w]
-                    if not hs:
-                        # a doc with no non-empty words produced no
-                        # token rows in the explode form and therefore
-                        # no output row — replicate the drop
-                        continue
-                    H = np.asarray(hs, dtype=np.int64)
-                    ones = ((H[:, None] >> bitpos) & 1).sum(axis=0)
-                    counts = 2 * ones - len(hs)  # (+1/-1 sums, exact ints)
-                    fp = int(((counts > 0).astype(np.int64) << bitpos).sum())
-                    keep.append(r)
-                    fps.append(fp)
-                if not keep:
-                    continue
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        ids.take(pa.array(keep, type=pa.int32())),
-                        pa.array(fps, type=pa.int64()),
-                    ],
-                    names=[id_col, "simhash"],
-                )
-
-        return base.mapInArrow(fingerprint, schema)
-    words = F.explode(
-        F.array_distinct(F.split(normalize_text(F.col(text_col)), " "))
-    ).alias("w")
-    tokens = (
-        df.repartition(_spread(df), F.col(id_col))
-        .select(id_col, words)
-        .filter(F.length("w") > 0)
+    words_arr = F.array_distinct(
+        F.split(normalize_text(F.col(text_col)), " ")
     )
-    h64 = F.conv(F.substring(F.md5(F.col("w")), 1, 15), 16, 10).cast("long")
-    tokens = tokens.withColumn("_h", h64)
-    aggs = [
-        F.sum(
-            F.when(F.shiftright(F.col("_h"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"_b{i}")
-        for i in range(nbits)
-    ]
-    per_doc = tokens.groupBy(id_col).agg(*aggs)
-    fp = F.lit(0).cast("long")
-    for i in range(nbits):
-        fp = fp + F.when(F.col(f"_b{i}") > 0, F.lit(1).cast("long") * (2**i)).otherwise(0)
-    return per_doc.select(id_col, fp.alias("simhash"))
+    base = df.repartition(_spread(df), F.col(id_col)).select(
+        id_col, words_arr.alias("_ws")
+    )
+    schema = T.StructType(
+        [df.schema[id_col], T.StructField("simhash", T.LongType())]
+    )
 
+    def fingerprint(batches):
+        import hashlib
 
-def simhash_near_pairs(sim: DataFrame, max_hamming: int = 3, id_col: str = "doc_id") -> DataFrame:
-    """Candidate near-dup pairs by Hamming distance on the 60-bit
-    simhash — delegates to the generalized :func:`hamming_near_pairs`
-    (at the default radius 3 that is the same 4 bands x 15 bits this
-    function historically hard-coded; one banding implementation means
-    one place for band-math fixes)."""
-    return hamming_near_pairs(sim, "simhash", id_col, 60, max_hamming)
+        import numpy as np
+
+        memo: dict = {}  # word -> 60-bit hash; words repeat zipfian
+        bitpos = np.arange(bits, dtype=np.int64)
+
+        def word_hash(w):
+            h = memo.get(w)
+            if h is None:
+                h = int(
+                    hashlib.md5(w.encode("utf-8")).hexdigest()[:15], 16
+                )
+                memo[w] = h
+            return h
+
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
+                continue
+            ids = batch.column(0)
+            ws = batch.column(1).to_pylist()
+            keep, fps = [], []
+            for r in range(n):
+                hs = [word_hash(w) for w in (ws[r] or ()) if w]
+                if not hs:
+                    continue  # no non-empty words: no output row
+                H = np.asarray(hs, dtype=np.int64)
+                ones = ((H[:, None] >> bitpos) & 1).sum(axis=0)
+                counts = 2 * ones - len(hs)  # (+1/-1 sums, exact ints)
+                fp = int(((counts > 0).astype(np.int64) << bitpos).sum())
+                keep.append(r)
+                fps.append(fp)
+            if not keep:
+                continue
+            yield pa.RecordBatch.from_arrays(
+                [
+                    ids.take(pa.array(keep, type=pa.int32())),
+                    pa.array(fps, type=pa.int64()),
+                ],
+                names=[id_col, "simhash"],
+            )
+
+    return base.mapInArrow(fingerprint, schema)
 
 
 #: internal scratch caches, at most ONE live per tag: each new call
@@ -723,10 +682,6 @@ def release_scratch_caches() -> None:
             pass
 
 
-#: back-compat name from the r11 self-report
-release_hamming_cache = release_scratch_caches
-
-
 def hamming_near_pairs(
     df: DataFrame,
     hash_col: str,
@@ -772,28 +727,17 @@ def hamming_near_pairs(
     base_w, extra = divmod(bits, bands)
     widths = [base_w + (1 if i < extra else 0) for i in range(bands)]
     shifts = [sum(widths[:i]) for i in range(bands)]
-    import os as _os
-
-    if (
-        bands > 1
-        and max_bucket_size is None
-        and _os.environ.get("SPARK_GRAFT_HAMMING_EXPLODE", "1") != "0"
-    ):
-        # optimization round 16 (guide §2.4): ONE self-join on the
-        # exploded (band, key) table instead of one join per band.
-        # The per-band form ran 2×bands evaluations of the projection
-        # and bands separate exchanges + a union; the exploded form
-        # shuffles the same total bytes (bands× rows, once) through a
-        # single exchange pair and one join. Pair set identical — a
-        # pair collides on band i in the per-band form iff the
-        # exploded rows (i, key) match, and the trailing distinct
-        # dedupes multi-band collisions either way. Measured min-of-4
-        # interleaved at sf0.1 on the simhash chain: 2.20 → 1.49 s
-        # (uncached) / 1.62 s with the salted one-live-entry cache,
-        # which also halves the upstream hash-kernel evaluations.
-        # ``SPARK_GRAFT_HAMMING_EXPLODE=0`` restores the per-band
-        # form; the capped (max_bucket_size) path always uses it —
-        # the star-collapse is per band-chunk by construction.
+    if bands > 1 and max_bucket_size is None:
+        # ONE self-join on the exploded (band, key) table instead of one
+        # join per band: the same total bytes (bands× rows, once) go
+        # through a single exchange pair and one join, where the
+        # per-band form below runs 2×bands evaluations of the projection
+        # and bands separate exchanges + a union. Pair set identical — a
+        # pair collides on band i in the per-band form iff the exploded
+        # rows (i, key) match, and the trailing distinct dedupes
+        # multi-band collisions either way. The capped (max_bucket_size)
+        # path keeps the per-band form: the star-collapse is per
+        # band-chunk by construction.
         keys = F.array(*[
             F.col(hash_col)
             if widths[i] >= 64
@@ -850,10 +794,10 @@ def hamming_near_pairs(
         # call's projection is unpersisted on each new call (and
         # eagerly via release_scratch_caches); cache=False skips
         # caching entirely when the caller manages persistence.
-        # Invocation-salted (r16): cloudpickle is deterministic, so
+        # Invocation-salted: cloudpickle is deterministic, so
         # even a mapInArrow upstream (simhash) is plan-EQUAL across
         # identical calls and a later call would otherwise be served
-        # this call's warm entry (r15 verdict #2's gaming shape).
+        # this call's warm entry.
         b = _scratch_cache(
             "hamming_bands",
             b.withColumn("_inv_salt", _invocation_salt()).cache(),
@@ -979,7 +923,7 @@ def cross_dedup(
     member decides the new doc's fate. The new side is never capped:
     every new doc needs its own keep/drop decision.
 
-    Memory: without ``existing_sigs``, the shared-shingle path caches
+    Memory: without ``existing_sigs``, this call caches
     the EXISTING corpus's (id, shingle_array) projection under the
     ``cross_arr_old`` scratch tag (MEMORY_AND_DISK; shingle arrays run
     several times the size of the source text). That cache stays
@@ -995,60 +939,40 @@ def cross_dedup(
             F.col(id_col), *[f"minhash_{i}" for i in range(n_hashes)]
         )
 
-    # optimization round 16 (guide §1.2 — don't compute things twice):
-    # each side's shingles were derived from text TWICE — exploded for
-    # the MinHash signatures AND rebuilt as arrays for the candidate
-    # verify (the verify arr build profiled as expensive as both
-    # signature passes at sf1: 1.75 s vs 1.9 s). When a side feeds
-    # BOTH consumers, its (id, shingle_array) projection is computed
-    # once into a salted one-live-entry scratch cache; the signatures
-    # explode the prebuilt array (identical values — same array, same
-    # md5 minima) and the verify semi-joins the same cache.
-    # ``SPARK_GRAFT_CROSS_SHARE=0`` restores the recompute form (A/B).
-    # DEFAULT ON (measured r16): interleaved A/B mins 7.08 → 5.09 s at
-    # sf1 (-28%), flat at sf0.1 (job-overhead-bound there); survivors
-    # identical. Memory posture: the cache is a corpus-sized
-    # (id, array) projection — MEMORY_AND_DISK, at most one live per
-    # tag — traded against a full second scan+shingle pass per side.
-    import os as _os
-
-    share = _os.environ.get("SPARK_GRAFT_CROSS_SHARE", "1") != "0"
-    new_arrs = ex_arrs = None
-    if share:
-        new_arrs = _scratch_cache(
-            "cross_arr_new",
-            new_docs.select(
+    # each side's shingles feed TWO consumers — the MinHash signatures
+    # and the candidate verify — so a side's (id, shingle_array)
+    # projection is computed once into a salted one-live-entry scratch
+    # cache; the signatures explode the prebuilt array (same array,
+    # same md5 minima) and the verify semi-joins the same cache. The
+    # cache is a corpus-sized (id, array) projection — MEMORY_AND_DISK,
+    # at most one live per tag — traded against a second scan+shingle
+    # pass per side.
+    new_arrs = _scratch_cache(
+        "cross_arr_new",
+        new_docs.select(
+            F.col(id_col),
+            shingle_array(F.col(text_col), k).alias("_sa"),
+            _invocation_salt(),
+        ).cache(),
+    ).drop("_inv_salt")
+    new_sigs = _sigs(new_arrs, array_col="_sa")
+    if existing_sigs is None:
+        ex_arrs = _scratch_cache(
+            "cross_arr_old",
+            existing_docs.select(
                 F.col(id_col),
-                shingle_array(F.col(text_col), k).alias("_sa"),
+                shingle_array(F.col(text_col), k).alias("_sb"),
                 _invocation_salt(),
             ).cache(),
         ).drop("_inv_salt")
-        new_sigs = _sigs(new_arrs, array_col="_sa")
-        if existing_sigs is None:
-            # old side also feeds both consumers — share it too; with
-            # precomputed signatures the verify is its only consumer
-            # and a cache would pay fill for no reuse
-            ex_arrs = _scratch_cache(
-                "cross_arr_old",
-                existing_docs.select(
-                    F.col(id_col),
-                    shingle_array(F.col(text_col), k).alias("_sb"),
-                    _invocation_salt(),
-                ).cache(),
-            ).drop("_inv_salt")
+        ex_sigs = _sigs(ex_arrs, array_col="_sb")
     else:
-        new_sigs = _sigs(new_docs)
-    ex_sigs = (
-        existing_sigs.select(
+        # with precomputed signatures the verify is the old side's only
+        # consumer, and a cache would pay its fill for no reuse
+        ex_arrs = None
+        ex_sigs = existing_sigs.select(
             F.col(id_col), *[f"minhash_{i}" for i in range(n_hashes)]
         )
-        if existing_sigs is not None
-        else (
-            _sigs(ex_arrs, array_col="_sb")
-            if ex_arrs is not None
-            else _sigs(existing_docs)
-        )
-    )
     a = _band_buckets(new_sigs, bands, id_col)
     if broadcast_new:
         a = F.broadcast(a)
@@ -1080,40 +1004,22 @@ def cross_dedup(
     )
     # the candidate frame feeds three joins below — materialize once so
     # the band pipeline (and the existing-side scan it contains) does
-    # not replay per consumer. SPARK_GRAFT_CROSS_CANDS picks the
-    # materialization: 'cache' = salted one-live-entry scratch cache
-    # (no pinned-RDD growth, but the InMemoryRelation re-plans the
-    # full band-join lineage per consumer); default 'ckpt' =
-    # localCheckpoint (lineage-truncated — measured faster; the
-    # pinned RDD is a KB-sized id-pair table per call, the documented
-    # bounded-bytes trade, see OPTIMIZATION_r16.md).
-    if _os.environ.get("SPARK_GRAFT_CROSS_CANDS", "ckpt") == "cache":
-        cands = _scratch_cache(
-            "cross_cands",
-            cands.withColumn("_inv_salt", _invocation_salt()).cache(),
-        ).drop("_inv_salt")
-    else:
-        cands = cands.localCheckpoint(eager=False)
+    # not replay per consumer. localCheckpoint truncates the lineage; a
+    # salted scratch cache measured 34-37% slower end to end, because
+    # its InMemoryRelation re-plans the full band-join lineage per
+    # consumer. The pinned RDD is a KB-sized id-pair table per call.
+    cands = cands.localCheckpoint(eager=False)
     # candidate-driven verify: filter BOTH corpora down to candidate
     # ids BEFORE building shingle arrays — the shingle cost is
     # |candidates|-bounded, and an incremental refresh with
-    # existing_sigs never re-shingles the training set. Under the
-    # r16 share path the arrays come from the same cached projection
-    # the signatures exploded, so this side builds no shingles at all.
-    new_arr = (
-        (new_arrs if new_arrs is not None else new_docs)
-        .join(
-            F.broadcast(cands.select(F.col("id_a").alias(id_col)).distinct()),
-            id_col,
-            "left_semi",
-        )
-        .select(
-            F.col(id_col).alias("id_a"),
-            F.col("_sa")
-            if new_arrs is not None
-            else shingle_array(F.col(text_col), k).alias("_sa"),
-        )
-    )
+    # existing_sigs never re-shingles the training set. The new side's
+    # arrays (and the old side's, without existing_sigs) come from the
+    # cached projection the signatures exploded.
+    new_arr = new_arrs.join(
+        F.broadcast(cands.select(F.col("id_a").alias(id_col)).distinct()),
+        id_col,
+        "left_semi",
+    ).select(F.col(id_col).alias("id_a"), F.col("_sa"))
     ex_arr = (
         (ex_arrs if ex_arrs is not None else existing_docs)
         .join(

@@ -150,27 +150,19 @@ def pack_sequences(
     Documents heavier than ``capacity`` get a bin of their own.
 
     Packing is inherently sequential, so the parallel axis is the md5
-    bucket. Physical shape (optimization round 15, guide §4.1): the
-    original ``groupBy(_b).applyInPandas`` paid one Arrow round-trip +
-    pandas construction PER BUCKET (256 of them — measured ~0.85 s of
-    the member's 1.09 s at sf0.1 on 5k docs); the default path now
-    hash-repartitions by ``_b`` (every bucket lands whole in exactly
-    one partition) and packs ALL of a partition's buckets in ONE
-    mapInPandas task — one Arrow round-trip per task, a single sort by
-    (bucket, hash, key), and the same greedy linear pass. Per-bucket
-    results are independent and internally sorted by (_h, key), so the
-    output is IDENTICAL to the per-group form (parity-pinned by
-    tests/test_round15_opt.py); ``SPARK_GRAFT_PACK_MAPPART=0`` restores
-    the per-group kernel. Deterministic end-to-end — the whole pack
-    replays as a per-bucket recursive CTE in SQL.
+    bucket. The frame is hash-repartitioned by ``_b`` (every bucket
+    lands whole in exactly one partition) and ALL of a partition's
+    buckets pack in ONE mapInPandas task — one Arrow round-trip per
+    task, a single sort by (bucket, hash, key), and a greedy linear
+    pass that resets per bucket. A per-bucket ``applyInPandas`` would
+    pay one Arrow round-trip + pandas construction per bucket (256 of
+    them). Deterministic end-to-end — the whole pack replays as a
+    per-bucket recursive CTE in SQL.
 
     Memory note: a task materializes its partition's (key, weight,
-    hash) rows — the same order of magnitude the per-group form held
-    for its largest bucket, times buckets-per-partition; size
+    hash) rows — its buckets-per-partition share of the corpus; size
     ``n_buckets`` >= shuffle partitions so buckets stay task-bounded.
     """
-    import os
-
     import pandas as pd
 
     h = F.md5(F.concat(F.col(key_col).cast("string"), F.lit(":" + salt)))
@@ -191,32 +183,6 @@ def pack_sequences(
         ]
     )
 
-    def pack_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["_h", key_col]).reset_index(drop=True)
-        bins, fill, cur = [], 0.0, 0
-        first = True
-        for w in pdf["_w"]:
-            if first:
-                fill, first = w, False
-            elif fill + w <= capacity:
-                fill += w
-            else:
-                cur += 1
-                fill = w
-            bins.append(cur)
-        return pd.DataFrame(
-            {
-                key_col: pdf[key_col],
-                "bucket": pdf["_b"].astype("int32"),
-                "bin": pd.Series(bins, dtype="int32"),
-            }
-        )
-
-    if os.environ.get("SPARK_GRAFT_PACK_MAPPART", "1") == "0":
-        return src.groupBy("_b").applyInPandas(
-            lambda _key, pdf: pack_one(pdf), out_schema
-        )
-
     def pack_partition(batches):
         chunks = list(batches)
         if not chunks:
@@ -226,8 +192,7 @@ def pack_sequences(
             if len(chunks) > 1 else chunks[0]
         )
         # one stable sort puts every bucket's rows in its (_h, key)
-        # stream order; the greedy fold then just resets per bucket —
-        # identical arithmetic to pack_one run per group
+        # stream order; the greedy fold then just resets per bucket
         pdf = pdf.sort_values(["_b", "_h", key_col]).reset_index(drop=True)
         bins = []
         fill, cur, prev_b = 0.0, 0, None

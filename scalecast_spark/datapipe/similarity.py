@@ -700,119 +700,29 @@ def pq_codebooks_trained(
     FAISS splits large cells instead — a data-dependent heuristic the
     SQL replay could not restate). Mirrors kmeans_embeddings'
     posexplode + groupBy-avg mean plan so the DuckDB oracle replays
-    the iterations with plain AVG (same 6dp convention).
-
-    Round-8 rewrite (VERDICT r7 wrong #1): the assignment is STAGED —
-    cell → residual → subvector slices → distance tables → codes each
-    materialize once per row as their own projection stage (the
-    _pq_encode_cols pattern), and the scan is repartitioned across
-    tasks first. The previous form embedded the full residual +
-    nearest-codeword expression tree inside every struct of one
-    F.array; nested higher-order functions evaluate interpreted with
-    no common-subexpression elimination, so each row re-ran the
-    residual (itself a transform over the whole centroid matrix)
-    ~m·ksub times in a single task — ~34 ms/row, 87 s of the sf0.1
-    bench. Identical arithmetic per element, same left-to-right fold
-    order, so the DuckDB replay is unchanged."""
-    import os
-
-    from scalecast_spark.datapipe.dedup import _spread
-
+    the iterations with plain AVG (same 6dp convention). The
+    assignment runs as one Arrow kernel per iteration
+    (:func:`_pq_train_arrow`)."""
     books = (
         pq_codebooks_residual(df, cents, m, ksub, vec_col, id_col)
         if cents is not None
         else pq_codebooks(df, m, ksub, vec_col, id_col)
     )
     sub = len(books[0][0][1])
-    if os.environ.get("SPARK_GRAFT_PQ_ARROW", "1") != "0":
-        return _pq_train_arrow(df, cents, books, m, ksub, sub, n_iter, vec_col)
-    base = df.select(F.col(vec_col).cast("array<double>").alias("_v"))
-    base = base.repartition(_spread(df))
-    if cents is not None:
-        base = base.withColumn(
-            "_cell", _cell_of(F.col("_v"), cents).cast("int")
-        ).select(
-            F.zip_with(
-                F.col("_v"),
-                F.element_at(
-                    _lit_mat([cv for _, cv in cents]), F.col("_cell")
-                ),
-                lambda a, b: a - b,
-            ).alias("_v")
-        )
-    # subvector slices are iteration-invariant; _v is referenced m
-    # times here, so CollapseProject keeps the residual stage separate
-    # (it never duplicates non-trivial multi-referenced expressions)
-    base = base.select(
-        *[
-            F.slice("_v", s * sub + 1, sub).alias(f"_sub{s}")
-            for s in range(m)
-        ]
-    )
-    for _ in range(n_iter):
-        enc = base.selectExpr(
-            "*",
-            *[
-                f"transform({_mat_sql([cv for _, cv in books[s]])}, "
-                f"c -> aggregate(zip_with(_sub{s}, c, (a, b) -> (a - b) * (a - b)), "
-                f"cast(0.0 as double), (acc, x) -> acc + x)) AS _d{s}"
-                for s in range(m)
-            ],
-        ).selectExpr(
-            "*",
-            *[
-                f"cast(array_position(_d{s}, array_min(_d{s})) as int) AS _code{s}"
-                for s in range(m)
-            ],
-        )
-        entries = F.array(
-            *[
-                F.struct(
-                    F.lit(s).alias("_s"),
-                    F.col(f"_code{s}").alias("_code"),
-                    F.col(f"_sub{s}").alias("_sl"),
-                )
-                for s in range(m)
-            ]
-        )
-        rows = (
-            enc.select(F.explode(entries).alias("_e"))
-            .select(
-                F.col("_e._s").alias("_s"),
-                F.col("_e._code").alias("_code"),
-                F.posexplode(F.col("_e._sl")).alias("_dim", "_x"),
-            )
-            .groupBy("_s", "_code", "_dim")
-            .agg(F.avg("_x").alias("_m"))
-            .collect()
-        )
-        upd: dict[tuple[int, int], list[float]] = {}
-        for r in rows:
-            upd.setdefault((r["_s"], r["_code"]), [0.0] * sub)[
-                r["_dim"]
-            ] = r["_m"]
-        books = [
-            [
-                (code, upd.get((s, code), cw))
-                for code, cw in books[s]
-            ]
-            for s in range(m)
-        ]
-    return books
+    return _pq_train_arrow(df, cents, books, m, ksub, sub, n_iter, vec_col)
 
 
 def _pq_train_arrow(df, cents, books, m, ksub, sub, n_iter, vec_col):
     """The Lloyd training loop's assignment stage as ONE Arrow kernel
-    per iteration (optimization round 15, guide §4.2): the HOF-fold
-    form rebuilt an 8-subspace literal expression tree with NEW
-    codebook values every iteration, so every iteration paid a full
-    whole-stage-codegen recompile (~1.1 s/job measured at sf0.1 —
-    12× the actual execution); the kernel keeps centroids/codebooks in
-    the task closure, runs the same arithmetic in numpy, and the
-    downstream (s, code, dim) → avg plan is literal-free and stable,
-    so codegen compiles once.
+    per iteration. A SQL higher-order-function form would rebuild an
+    m-subspace literal expression tree with NEW codebook values every
+    iteration and pay a full whole-stage-codegen recompile each time
+    (~1.1 s/job measured at sf0.1 — 12× the actual execution); the
+    kernel keeps centroids/codebooks in the task closure, runs the
+    arithmetic in numpy, and the downstream (s, code, dim) → avg plan
+    is literal-free and stable, so codegen compiles once.
 
-    BIT-EXACT twin of the SQL form (pinned by
+    BIT-EXACT against that SQL form (kept as the oracle in
     tests/test_round15_opt.py): every fold is replicated as a
     per-dimension vectorized accumulation — ``acc += x[:,d]*c[d]`` in
     dimension order is exactly the SQL ``aggregate`` left-fold per
@@ -1034,46 +944,18 @@ def ivfpq_encode(
     append mode — see ``streaming.ops.ivfpq_encode_stream`` for the
     crawl-increment wiring. Rows with a NULL ``vec_col`` pass through
     with NULL cell/codes (tokenless docs from embed_docs_rowwise).
+
+    Runs as ONE Arrow kernel with the same per-row arithmetic as the
+    staged-HOF projection :func:`_pq_encode_cols` — every fold
+    replicated as a per-dimension vectorized accumulation (bit-exact:
+    the SQL ``aggregate`` left-fold IS ``acc += ...`` in dimension
+    order), argmax/argmin take the first extremum like array_position
+    over array_max/min — but the centroid/codebook tables live in the
+    task closure instead of literal expression trees, so the plan is
+    small, stable, and whole-stage-codegen never recompiles per build.
+    Parity with the projection is pinned by tests/test_round15_opt.py
+    and tests/test_ivfpq.py.
     """
-    import os
-
-    if os.environ.get("SPARK_GRAFT_PQ_ARROW", "1") != "0":
-        return _ivfpq_encode_arrow(
-            df, cents, books, vec_col, residual, cell_col, code_col
-        )
-    vec = F.col(vec_col).cast("array<double>")
-    out = df.withColumn("_cell", _cell_of(vec, cents))
-    out = _pq_encode_cols(out, cents, books, vec_col, residual)
-    m = len(books)
-    codes = "array(" + ", ".join(f"_code{s}" for s in range(m)) + ")"
-    return out.selectExpr(
-        *df.columns,
-        f"cast(_cell as int) AS {cell_col}",
-        f"CASE WHEN _cell IS NOT NULL THEN {codes} END AS {code_col}",
-    )
-
-
-def _ivfpq_encode_arrow(
-    df: DataFrame,
-    cents,
-    books,
-    vec_col: str,
-    residual: bool,
-    cell_col: str,
-    code_col: str,
-) -> DataFrame:
-    """:func:`ivfpq_encode` as ONE Arrow kernel (optimization round 15,
-    guide §4.2): same per-row arithmetic as the staged-HOF projection —
-    every fold replicated as a per-dimension vectorized accumulation
-    (bit-exact: the SQL ``aggregate`` left-fold IS ``acc += ...`` in
-    dimension order), argmax/argmin take the first extremum like
-    array_position over array_max/min, NULL vectors pass through with
-    NULL cell/codes — but the centroid/codebook tables live in the task
-    closure instead of literal expression trees, so the plan is small,
-    stable, and whole-stage-codegen never recompiles per build. Still a
-    pure stateless projection: applies unchanged to readStream frames
-    (ivfpq_encode_stream), exactly like the SQL form. Parity pinned by
-    tests/test_round15_opt.py and tests/test_ivfpq.py."""
     import pyarrow as pa
     from pyspark.sql import types as T
 
@@ -1322,11 +1204,11 @@ def ivfpq_search(
 
 
 def _batch_qx_inplan(q, cents, books, nprobe, qid_col, m, sub):
-    """Legacy batch query-side tables, computed in-plan as
-    ``transform``/``aggregate`` folds over literal index matrices.
-    Kept as the fallback for degenerate query vectors (NULL / ragged /
-    non-finite — their NULL-propagation and NaN-ordering semantics
-    belong to SQL) and behind ``SPARK_GRAFT_BATCH_ADC_DRIVER=0``."""
+    """Batch query-side tables computed in-plan as
+    ``transform``/``aggregate`` folds over literal index matrices —
+    the path for query sets with a degenerate vector (NULL / ragged /
+    non-finite), whose NULL-propagation and NaN-ordering semantics
+    belong to SQL."""
     cents_mat = _mat_sql([cv for _, cv in cents])
     q = q.selectExpr(
         "*",
@@ -1493,12 +1375,11 @@ def ivfpq_search_batch(
     single-query driver path uses numpy dot — identical at 6dp away
     from rounding straddles.
 
-    The query-side tables are computed DRIVER-side by default (r15):
-    the query set is collected — bounded by the same contract that
-    lets it broadcast at all — and each query's probe set / dot
-    tables are built with plain sequential float64 accumulation, the
-    exact op order of the SQL ``aggregate`` folds they replace, so
-    the scores are bit-identical. What that buys: the per-query
+    The query-side tables are computed DRIVER-side: the query set is
+    collected — bounded by the same contract that lets it broadcast
+    at all — and each query's probe set / dot tables are built with
+    plain sequential float64 accumulation, the exact op order of the
+    in-plan SQL ``aggregate`` folds, so the scores are bit-identical. What that buys: the per-query
     ``transform``-over-literal-matrix expression trees (centroids +
     m codebooks per query column) vanish from the plan, which both
     shrinks it and makes the broadcast side a plain local relation
@@ -1507,9 +1388,7 @@ def ivfpq_search_batch(
     stage stays byte-stable across calls. Degenerate query sets (a
     NULL / ragged / non-finite vector, whose NULL-propagation and
     NaN-ordering semantics belong to SQL) fall back to the in-plan
-    form, as does ``SPARK_GRAFT_BATCH_ADC_DRIVER=0``."""
-    import os
-
+    form."""
     from pyspark.sql import Window
 
     m = len(books)
@@ -1518,24 +1397,18 @@ def ivfpq_search_batch(
     q = queries_df.selectExpr(
         qid_col, f"cast({qvec_col} as array<double>) AS _qv"
     )
-    qx = None
-    if os.environ.get("SPARK_GRAFT_BATCH_ADC_DRIVER", "1") != "0":
-        built = _batch_qx_driver(
-            q, cents, books, nprobe, qid_col, m, d, sub
-        )
-        if built is not None:
-            qx, probed = built
-            if probed:
-                # static partition pruning: the probe set is known
-                # driver-side, so the code-table scan carries a plain
-                # `cell IN (...)` PartitionFilter instead of waiting
-                # on runtime DPP (redundant with the equi-join on
-                # _pcell — results unchanged, scan strictly pruned)
-                codes_df = codes_df.filter(
-                    F.col(cell_col).isin(probed)
-                )
-    if qx is None:
+    built = _batch_qx_driver(q, cents, books, nprobe, qid_col, m, d, sub)
+    if built is None:
         qx = _batch_qx_inplan(q, cents, books, nprobe, qid_col, m, sub)
+    else:
+        qx, probed = built
+        if probed:
+            # static partition pruning: the probe set is known
+            # driver-side, so the code-table scan carries a plain
+            # `cell IN (...)` PartitionFilter instead of waiting on
+            # runtime DPP (redundant with the equi-join on _pcell —
+            # results unchanged, scan strictly pruned)
+            codes_df = codes_df.filter(F.col(cell_col).isin(probed))
     adc = _adc_cosine_sql(
         None, cents, books, residual,
         cell_expr=f"cast({cell_col} as int)",

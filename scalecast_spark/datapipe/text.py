@@ -44,10 +44,6 @@ def _word_count_norm(norm: Column) -> Column:
     )
 
 
-def _word_count(col: Column) -> Column:
-    return _word_count_norm(_ws_norm(col))
-
-
 def _spaced2(norm: Column) -> Column:
     """Pad + double every space so each word owns BOTH its surrounding
     spaces: ``"a b"`` → ``"  a  b  "``. A single alternation regex
@@ -685,10 +681,6 @@ def _ngram_zip(norm_col: Column, n: int) -> Column:
     return ngram_chain(split_words(norm_col), n)
 
 
-def _word_ngrams(col: Column, n: int) -> Column:
-    return _ngram_zip(_norm(col), n)
-
-
 def contamination_hits(
     docs: DataFrame,
     benchmark: DataFrame,
@@ -947,27 +939,6 @@ def curate_corpus(
     )
 
 
-def _spans_window_count() -> bool:
-    """Optimization round 16: the ExactSubstr detectors' corpus-wide
-    window-occurrence count runs as a window function OVER the exploded
-    (id, pos, hash) table instead of a groupBy + join-back. The join
-    form evaluated the tokenize/explode/hash subtree twice (one arm per
-    consumer) and exchanged the doc table twice; the window form
-    evaluates it once and exchanges the window table once (by the
-    8-byte hash — never text). count/min per hash partition are
-    order-insensitive, so the surviving (id, pos) rows are identical.
-    ``SPARK_GRAFT_SPANS_WINDOW=0`` restores the join form (A/B lane).
-
-    DEFAULT ON (measured r16): min-of-5 interleaved A/B at sf0.1 —
-    detector 1.253 → 1.189 s, cut 1.421 → 1.391 s, and the cold first
-    pass 8.6/5.1 → 2.2 s (fewer codegen stages); at scale the join
-    form's second evaluation of the tokenize/explode/hash subtree is
-    a full extra corpus pass, which the window form removes."""
-    import os
-
-    return os.environ.get("SPARK_GRAFT_SPANS_WINDOW", "1") != "0"
-
-
 def repeated_spans(
     df: DataFrame,
     k: int = 8,
@@ -985,10 +956,20 @@ def repeated_spans(
     0-based inclusive WORD indices into the normalized token stream.
 
     Fully declarative: posexplode the window hashes, one corpus-wide
-    count on the 8-byte hash (shuffle carries hashes, never text),
-    join back, and a per-doc gaps-and-islands window merge (windows
-    [p, p+k-1] fuse while next_pos ≤ prev_pos + k). The duplicated
-    subset is dup-rate-bounded — the full corpus never shuffles."""
+    occurrence count as a window function partitioned by the 8-byte
+    hash (shuffle carries hashes, never text), and a per-doc
+    gaps-and-islands window merge (windows [p, p+k-1] fuse while
+    next_pos ≤ prev_pos + k). The tokenize/explode/hash subtree is
+    evaluated once and exchanged once; a groupBy + join-back count
+    would evaluate it twice.
+
+    Skew posture: the count sends every occurrence of one hash to one
+    task, so a hot n-gram (boilerplate repeated across the corpus)
+    lands whole on one task, which buffers the hash's rows in Spark's
+    spillable window buffer. Measured on 4 cores with 2,000 docs
+    sharing one 8-gram ~4M times, the slowest task took 2.9-3.4 s
+    against 3.9-4.4 s for the groupBy + join-back form, whose hot-hash
+    join rows also meet in one task."""
     from pyspark.sql import Window
 
     from scalecast_spark.datapipe.dedup import _spread
@@ -1002,31 +983,12 @@ def repeated_spans(
         ws.select(id_col, F.posexplode(ngram_chain(F.col("_ws"), k)).alias("_pos", "_ng"))
         .select(id_col, "_pos", F.xxhash64("_ng").alias("_h"))
     )
-    if _spans_window_count():
-        # optimization round 16 (guide §2.4/§1.2): the corpus-wide
-        # window count ON the exploded table replaces the groupBy +
-        # join-back pair, whose two arms each re-evaluated the
-        # tokenize/explode/hash subtree (two Generate arms + two doc
-        # exchanges in the r15 plan; a fresh-per-invocation cache of
-        # pos_ng was measured SLOWER in r15 — materializing ~n_words
-        # rows costs more than recompute). One evaluation, one
-        # exchange of the window table by the 8-byte hash; count()
-        # over an unordered hash partition is order-insensitive, so
-        # the kept (id, pos) set is identical to the join form's.
-        hits = (
-            pos_ng.withColumn(
-                "_c", F.count("*").over(Window.partitionBy("_h"))
-            )
-            .filter(F.col("_c") >= min_count)
-            .select(id_col, "_pos")
-        )
-    else:
-        dup = (
-            pos_ng.groupBy("_h").agg(F.count("*").alias("_c"))
-            .filter(F.col("_c") >= min_count)
-            .select("_h")
-        )
-        hits = pos_ng.join(dup, "_h").select(id_col, "_pos")
+    # count() over an unordered hash partition is order-insensitive
+    hits = (
+        pos_ng.withColumn("_c", F.count("*").over(Window.partitionBy("_h")))
+        .filter(F.col("_c") >= min_count)
+        .select(id_col, "_pos")
+    )
     w = Window.partitionBy(id_col).orderBy("_pos")
     brk = F.when(F.lag("_pos").over(w).isNull(), 1).when(
         F.col("_pos") > F.lag("_pos").over(w) + k, 1
@@ -1080,17 +1042,42 @@ def _pack_trigrams(s: str):
     return (codes[:-2] << 42) | (codes[1:-1] << 21) | codes[2:]
 
 
-def _add_trigram_logprob_arrow(
-    df: DataFrame, text_col: str, id_col: str, round_to: int
+def add_trigram_logprob(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    round_to: int = 4,
 ) -> DataFrame:
-    """Arrow-kernel twin of the declarative add_trigram_logprob (see
-    its docstring for the equivalence argument). Two passes:
-    count (per-task np.unique partials → one tiny sum-aggregate →
-    driver) then score (vectorized sorted-vocab lookup + cumsum fold
-    per doc). Construction runs the count job eagerly — the count
-    table lives only in the returned plan's kernel closure, so every
-    invocation recomputes from the source (nothing is memoized across
-    bench/oracle runs)."""
+    """Language-model quality scoring without a language model: each
+    document's mean UNCONDITIONAL log-probability under the corpus's
+    own character-trigram distribution — ln(C3(tri)/N) averaged over
+    the doc's trigrams, counts from the whole corpus. The
+    CCNet/Wenzek et al. perplexity-filter idea with the corpus itself
+    as the reference model: natural prose is built from common
+    trigrams and scores high; gibberish/encoded blobs are built from
+    rare ones and score very low. Emits ``tri_logprob`` (NULL for docs
+    with <3 normalized chars).
+
+    Scale shape: two mapInArrow passes over the SAME JVM-normalized
+    text (normalization byte semantics stay Spark's). Pass 1 counts
+    packed code-point trigrams per task (np.unique — exact integer
+    counts); the per-task partials meet in ONE tiny sum-aggregate and
+    the vocab-bounded count table (~charset³ distinct keys,
+    independent of corpus size; sf1 measured 1,891 entries for 14.8M
+    instances) is collected driver-side. Pass 2 scores each doc by a
+    vectorized sorted-vocab lookup. Construction runs the count job
+    eagerly — the count table lives only in the returned plan's kernel
+    closure, so every invocation recomputes from the source.
+
+    Per-doc float op order equals the declarative explode + broadcast
+    join + avg form: np.cumsum is the same sequential left-fold in
+    trigram-position order as Spark's avg accumulator over the
+    position-ordered joined rows, the mean is the same sum/count
+    double division, and the round + join-back stay in the JVM.
+    Rounded to ``round_to`` dp because a per-doc float mean is
+    summation-order-sensitive across engines (COVERAGE.md 'Oracle
+    rounding precision per member'); np.log's ≤1-ulp libm difference
+    sits inside the same tolerance."""
     import numpy as np
     import pyarrow as pa
     from pyspark.sql import types as T
@@ -1128,13 +1115,11 @@ def _add_trigram_logprob_arrow(
         cmap = {r["_k"]: r["_c"] for r in rows}
         counts = np.array([cmap[k] for k in vocab.tolist()], dtype=np.int64)
         nt = int(counts.sum())
-        # the same double division the SQL form evaluates per row
+        # the same double division a SQL replay evaluates per row
         # (long→double casts are exact below 2^53). np.log can differ
         # from the JVM's log by 1 ulp (measured: ≤1.8e-15 on real
         # vocab ratios) — inside the operator's documented round_to
-        # cross-engine tolerance, exactly like the JVM-vs-DuckDB-ln
-        # difference the SQL form already absorbs; end-to-end rounded
-        # parity is pinned by tests/test_round15_opt.py
+        # cross-engine tolerance, which already absorbs JVM-vs-DuckDB ln
         logtab = np.log(counts.astype(np.float64) / float(nt))
     else:  # empty/short-only corpus: no doc reaches the score pass
         vocab = np.empty(0, dtype=np.int64)
@@ -1168,86 +1153,6 @@ def _add_trigram_logprob_arrow(
 
     scored = base.mapInArrow(score, out_schema).select(
         id_col, F.round(F.col("_lp"), round_to).alias("tri_logprob")
-    )
-    return df.join(scored, id_col, "left")
-
-
-def add_trigram_logprob(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    round_to: int = 4,
-) -> DataFrame:
-    """Language-model quality scoring without a language model: each
-    document's mean UNCONDITIONAL log-probability under the corpus's
-    own character-trigram distribution — ln(C3(tri)/N) averaged over
-    the doc's trigrams, counts from the whole corpus. The
-    CCNet/Wenzek et al. perplexity-filter idea with the corpus itself
-    as the reference model: natural prose is built from common
-    trigrams and scores high; gibberish/encoded blobs are built from
-    rare ones and score very low. Emits ``tri_logprob`` (NULL for docs
-    with <3 normalized chars).
-
-    Scale shape: explode char trigrams (n_chars rows/doc), ONE count
-    aggregate (trigram vocabulary is bounded — ~charset³ distinct
-    keys, independent of corpus size), N as a one-row aggregate of the
-    count table (no second corpus scan), both broadcast back. Rounded
-    to ``round_to`` dp because a per-doc float mean is
-    summation-order-sensitive across engines (COVERAGE.md 'Oracle
-    rounding precision per member').
-
-    Optimization round 15 (guide §4.2): the default path replaces the
-    [explode ×2 + n_chars-row hash aggregate + n_chars-row broadcast
-    join] with two mapInArrow passes over the SAME JVM-normalized
-    text (normalization byte semantics stay Spark's): pass 1 counts
-    packed code-point trigrams per task (np.unique — exact integer
-    counts, identical to the SQL count by construction), the
-    vocab-bounded count table is collected driver-side (the same
-    charset³ boundedness that justified broadcasting it in-plan; sf1
-    measured vocab: 1,891 entries for 14.8M instances), and pass 2
-    scores each doc by a vectorized table lookup. Per-doc float op
-    order is replicated exactly: np.cumsum is the same sequential
-    left-fold in trigram-position order as Spark's avg accumulator
-    over the position-ordered joined rows, the mean is the same
-    sum/count double division, and the round + join-back stay in the
-    JVM (np.log's ≤1-ulp libm difference sits inside the same
-    round_to tolerance that already absorbs JVM-vs-oracle ln).
-    ``SPARK_GRAFT_TRIGRAM_ARROW=0`` restores the declarative form
-    (parity-pinned by tests/test_round15_opt.py)."""
-    import os
-
-    from scalecast_spark.datapipe.dedup import _spread
-
-    if os.environ.get("SPARK_GRAFT_TRIGRAM_ARROW", "1") != "0":
-        return _add_trigram_logprob_arrow(df, text_col, id_col, round_to)
-
-    # materialize the normalized text ONCE (HOF lambdas get no CSE — a
-    # norm reference inside the transform would re-run the regexp per
-    # trigram), and repartition before the explode: the corpus may
-    # arrive as one byte-small file whose exploded trigram stream is
-    # compute-heavy (AQE sizes by bytes and would coalesce it back)
-    base = df.repartition(_spread(df), id_col).select(
-        id_col, _norm(F.col(text_col)).alias("_n")
-    )
-    nn = F.col("_n")
-    tri_arr = F.transform(
-        F.when(
-            F.length(nn) >= 3, F.sequence(F.lit(1), F.length(nn) - 2)
-        ).otherwise(F.array().cast("array<int>")),
-        lambda i: nn.substr(i, F.lit(3)),
-    )
-    tris = base.select(id_col, F.explode(tri_arr).alias("_tri"))
-    c3 = tris.groupBy("_tri").agg(F.count("*").alias("_c3"))
-    total = c3.groupBy().agg(F.sum("_c3").alias("_nt"))
-    scored = (
-        tris.join(F.broadcast(c3), "_tri")
-        .crossJoin(F.broadcast(total))
-        .groupBy(id_col)
-        .agg(
-            F.round(
-                F.avg(F.log(F.col("_c3") / F.col("_nt"))), round_to
-            ).alias("tri_logprob")
-        )
     )
     return df.join(scored, id_col, "left")
 
@@ -1603,10 +1508,11 @@ def remove_duplicate_spans(
     (span surgery is word-level). ``keep_first=False`` cuts every
     occurrence (the decontamination semantics).
 
-    Shape: identical to repeated_spans — the shuffle carries 8-byte
-    window hashes and positions, never text; the canonical-occurrence
-    choice is one min() in the same aggregate that counts the window;
-    the corpus body never joins against exploded n-grams."""
+    Shape and skew posture: identical to repeated_spans — the shuffle
+    carries 8-byte window hashes and positions, never text, and all
+    occurrences of one hash meet in one task; the canonical-occurrence
+    choice is one min() over the same hash window that counts it; the
+    corpus body never joins against exploded n-grams."""
     from pyspark.sql import Window
 
     from scalecast_spark.datapipe.dedup import _spread
@@ -1624,24 +1530,13 @@ def remove_duplicate_spans(
     # occurrence key: doc_id * 1e7 + position — total order matching
     # (doc_id, pos) lexicographic order for positions < 1e7
     okey = F.col(id_col) * F.lit(10_000_000) + F.col("_pos")
-    if _spans_window_count():
-        # single-evaluation window form — see the repeated_spans note
-        # (optimization round 16). count/min over the unordered hash
-        # partition are order-insensitive: identical hits either way.
-        wh = Window.partitionBy("_h")
-        hits = (
-            pos_ng.withColumn("_c", F.count("*").over(wh))
-            .withColumn("_c0", F.min(okey).over(wh))
-            .filter(F.col("_c") >= min_count)
-        )
-    else:
-        dup = (
-            pos_ng.groupBy("_h")
-            .agg(F.count("*").alias("_c"), F.min(okey).alias("_c0"))
-            .filter(F.col("_c") >= min_count)
-            .select("_h", "_c0")
-        )
-        hits = pos_ng.join(dup, "_h")
+    # count/min over the unordered hash partition are order-insensitive
+    wh = Window.partitionBy("_h")
+    hits = (
+        pos_ng.withColumn("_c", F.count("*").over(wh))
+        .withColumn("_c0", F.min(okey).over(wh))
+        .filter(F.col("_c") >= min_count)
+    )
     if keep_first:
         hits = hits.filter(okey != F.col("_c0"))
     w = Window.partitionBy(id_col).orderBy("_pos")

@@ -1206,21 +1206,15 @@ class Forecaster:
         """(fit_fn, normalizer, dynamic_testing) for the CURRENT
         estimator + manual_forecast kwargs when the estimator is
         kernel-backed and every kwarg maps onto its factory — the
-        routing test for the fused test+full pass (run_kernel_testfull,
-        optimization round 15). Mirrors _grid_cells' conventions
-        exactly: normalizer/dynamic_testing defaults come from the
-        MODEL function's signature, an unexpected hyperparameter
-        TypeErrors the factory and falls back (return None) to the
-        generic two-pass path. Opt out via
-        SPARK_GRAFT_FUSED_TESTFULL=0 (the parity lane compares both
-        paths)."""
+        routing test for the fused test+full pass (run_kernel_testfull).
+        Mirrors _grid_cells' conventions exactly: normalizer/
+        dynamic_testing defaults come from the MODEL function's
+        signature, an unexpected hyperparameter TypeErrors the factory
+        and falls back (return None) to the generic two-pass path."""
         import inspect
-        import os
 
         from scalecast_spark.models import KERNEL_FACTORIES, MODELS
 
-        if os.environ.get("SPARK_GRAFT_FUSED_TESTFULL", "1") == "0":
-            return None
         if self.estimator not in KERNEL_FACTORIES:
             return None
         p = {k: v for k, v in kwargs.items() if k != "Xvars"}
@@ -1246,21 +1240,20 @@ class Forecaster:
         """manual_forecast for kernel estimators via ONE fused Spark
         job (kernel.run_kernel_testfull): the test fit and the full
         fit run inside the same series task, and the tagged output is
-        cached so the test-metric collect, the in-sample-metric
-        collect, the conformal widths, and the eventual forecast
-        materialization all read one computed frame instead of
-        re-running the kernel per action (optimization guide §1.2).
+        cached so the metric collect, the conformal widths, and the
+        eventual forecast materialization all read one computed frame
+        instead of re-running the kernel per action.
 
-        Optimization round 16: the cached plan is SALTED with a
-        per-invocation literal. The r15 assumption that embedding a
-        fresh Python function makes each call's plan unique is FALSE —
-        cloudpickle is deterministic, so a same-args re-fit builds a
-        plan-EQUAL frame (CacheManager logs "already cached") and (a)
-        a later identical call would be served the previous call's
-        warm entry, (b) unpersisting the old registry entry would
-        un-cache the new one (the _scratch_cache docstring bug). The
-        salt makes every invocation's cached plan unique, so each call
-        computes from the inputs and the swap below is safe."""
+        The cached plan is SALTED with a per-invocation literal.
+        Embedding a fresh Python function does not make a call's plan
+        unique: cloudpickle is deterministic, so a same-args re-fit
+        builds a plan-EQUAL frame (CacheManager logs "already
+        cached"), and without the salt (a) a later identical call
+        would be served the previous call's warm entry, (b)
+        unpersisting the old registry entry would un-cache the new one
+        (the _scratch_cache docstring bug). The salt makes every
+        invocation's cached plan unique, so each call computes from the
+        inputs and the swap below is safe."""
         from scalecast_spark.models.kernel import run_kernel_testfull
 
         fit_fn, norm, dyn = cell
@@ -1287,9 +1280,9 @@ class Forecaster:
         # lazily if still read; correctness unaffected)
         _scratch_cache(f"fused::{name}", salted.cache())
         fused = salted.drop("_inv_salt")
-        # release path (r15 verdict #3/#5): a re-fit under the same
-        # nickname replaces its history entry, so the old cached frame
-        # would be unreachable — unpersist it (the entry's consumers
+        # release path: a re-fit under the same nickname replaces its
+        # history entry, so the old cached frame would be unreachable —
+        # unpersist it (the entry's consumers
         # recompute lazily if some external reference still reads it;
         # correctness unaffected, only recompute cost)
         self._release_fused(name)
@@ -1314,34 +1307,10 @@ class Forecaster:
         fc = full.filter(F.col(IS_FUTURE) == 1).select(SERIES, DS, "forecast")
         if widths is not None:
             fc = apply_intervals(fc, widths)
-        # optimization round 16 (guide §1.2, the infer_meta pattern):
-        # the test-set and in-sample metric summaries were TWO collect
-        # jobs over the cached fused frame; union-arming the two 1-row
-        # aggregates collects both in ONE job. Each arm keeps its own
-        # aggregation plan, so every metric value is bit-identical to
-        # the separate collects. SPARK_GRAFT_FUSED_METRICS=0 restores
-        # the two-collect form (A/B lane).
-        import os as _os
-
-        if _os.environ.get("SPARK_GRAFT_FUSED_METRICS", "1") == "0":
-            if test_df is not None:
-                per_series_test, test_metrics = self._metric_summary(
-                    test_df, self.metrics
-                )
-            per_series_in, insample_metrics = self._metric_summary(
-                fitted, self.metrics
-            )
-            self.history[name] = {
-                "forecast": fc,
-                "fitted": fitted,
-                "test_preds": test_df,
-                "per_series_test_metrics": per_series_test,
-                "per_series_insample_metrics": per_series_in,
-                "summary": self._fused_summary(
-                    kwargs, test_metrics, insample_metrics
-                ),
-            }
-            return self
+        # the test-set and in-sample metric summaries collect in ONE
+        # job: union-arming the two 1-row aggregates keeps each arm's
+        # own aggregation plan, so every value is bit-identical to a
+        # separate _metric_summary collect per frame.
         if test_df is not None:
             per_series_test = METRICS.evaluate(
                 test_df, actual=Y, forecast="forecast", by=[SERIES],

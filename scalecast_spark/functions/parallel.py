@@ -15,14 +15,13 @@ so the GIL is irrelevant); nothing here touches executor parallelism.
 
 from __future__ import annotations
 
-import os
 from concurrent.futures import ThreadPoolExecutor
 from typing import Any, Callable, Sequence
 
 #: default driver-side job concurrency; 8 overlapping jobs saturates a
 #: local[32] session's scheduler without flooding a real cluster's
-#: event queue. Override via SPARK_GRAFT_JOB_POOL.
-DEFAULT_POOL = int(os.environ.get("SPARK_GRAFT_JOB_POOL", "8"))
+#: event queue. Callers override per call with ``run_jobs(max_workers=)``.
+DEFAULT_POOL = 8
 
 
 def run_jobs(

@@ -131,10 +131,6 @@ def bfill(df: DataFrame, col: str = Y) -> DataFrame:
     return df.withColumn(col, F.first(col, ignorenulls=True).over(w))
 
 
-def fill_static(df: DataFrame, value: float, col: str = Y) -> DataFrame:
-    return df.withColumn(col, F.coalesce(F.col(col), F.lit(float(value))))
-
-
 def linear_interp(df: DataFrame, col: str = Y) -> DataFrame:
     """Linear interpolation between the bracketing observations
     (reference 'linear_interp', the default — util.py:1010-1030;
@@ -219,16 +215,6 @@ def clamp(df: DataFrame, floor: float | None = None, cap: float | None = None, c
     if cap is not None:
         c = F.least(c, F.lit(float(cap)))
     return df.withColumn(col, c)
-
-
-def add_noise(df: DataFrame, scale: float, seed: int = 42, col: str = Y) -> DataFrame:
-    """Deterministic noise injection on FILLED values (reference
-    util.py:1059-1075 adds uniform noise to imputed points).
-    ``F.rand(seed)`` is reproducible per partition layout; for strict
-    cross-run determinism use a stable row hash."""
-    return df.withColumn(
-        col, F.col(col) + (F.rand(seed) - 0.5) * 2.0 * scale
-    )
 
 
 def fill_first_obs(df: DataFrame, strategy: str = "bfill", value: float | None = None, col: str = Y) -> DataFrame:

@@ -12,6 +12,7 @@ candidate is a filter, never a copy.
 from __future__ import annotations
 
 import math
+import warnings
 
 import numpy as np
 from pyspark.sql import functions as F
@@ -136,7 +137,7 @@ def _ttf_body(f, plan, cross_validate, k, error,
             # test_length isn't passed (validation_length is tune()'s
             # 1-fold length, never a CV fold size; injecting it here
             # made a default validation_length=1 produce 1-row rolling
-            # train windows — the round-15 Introduction2 lane bug)
+            # train windows)
             g.cross_validate(
                 k=k, dynamic_tuning=dynamic_tuning, **(cv_kwargs or {})
             )
@@ -144,8 +145,8 @@ def _ttf_body(f, plan, cross_validate, k, error,
             g.tune(dynamic_tuning=dynamic_tuning)
         # the winning validation score travels with the params so the
         # forecast clone banks ValidationMetricValue like the
-        # reference's single-object loop does (round-15: the combo
-        # weighted default reads it from history)
+        # reference's single-object loop does (the combo weighted
+        # default reads it from history)
         return g.best_params, g.grid_evaluated, g.validation_metric_value
 
     tuned = run_jobs(
@@ -156,11 +157,10 @@ def _ttf_body(f, plan, cross_validate, k, error,
         ],
         on_error="raise" if error == "raise" else "nan",
     )
-    # Round 11b: the FORECAST phase overlaps too — each winner's
-    # test→fit→bank pipeline is ~10 small blocking actions (metric
-    # summaries, conformal widths, fitted/forecast materialization),
-    # so three models serialized left the scheduler idle between
-    # round-trips exactly like the pre-r11 tune loop. Same clone
+    # the FORECAST phase overlaps too — each winner's test→fit→bank
+    # pipeline is ~10 small blocking actions (metric summaries,
+    # conformal widths, fitted/forecast materialization), so serialized
+    # models would leave the scheduler idle between round-trips. Same clone
     # pattern: compute each model's history ENTRY concurrently, then
     # attach entries to the real object in input order (banking is a
     # dict write — order only matters for reproducible iteration).
@@ -198,9 +198,7 @@ def _ttf_body(f, plan, cross_validate, k, error,
         except Exception as e:
             if error == "raise":
                 raise
-            if error == "warn":
-                print(f"tune_test_forecast: {m} failed: {e}")
-            return None
+            return e
 
     outs = run_jobs(
         [
@@ -211,6 +209,14 @@ def _ttf_body(f, plan, cross_validate, k, error,
     )
     for (m, grid), res, out in zip(plan, tuned, outs):
         if not isinstance(out, tuple):
+            # warned from the caller's thread, in model order, so the
+            # caller can capture or filter it like any other warning
+            if error == "warn":
+                warnings.warn(
+                    f"tune_test_forecast: {m} failed: {out!r}",
+                    RuntimeWarning,
+                    stacklevel=3,
+                )
             continue
         entry, bp, ge = out
         f.history[m + (suffix or "")] = entry

@@ -348,10 +348,12 @@ def test_batch_search_plan_shape(index_art, tmp_path):
 
 @pytest.mark.parametrize("residual", [False, True])
 def test_batch_driver_tables_match_inplan(index_art, residual, monkeypatch):
-    """r15: the driver-side query-table path (sequential float64
-    folds + static cell pruning) must return BIT-identically what the
-    legacy in-plan transform/aggregate path returns — same rows, same
-    scores, same tie-breaks."""
+    """The driver-side query-table path (sequential float64 folds +
+    static cell pruning) must return BIT-identically what the in-plan
+    transform/aggregate path returns — same rows, same scores, same
+    tie-breaks. The in-plan oracle runs with ``_batch_qx_driver``
+    patched to decline, as it does for degenerate query vectors."""
+    from scalecast_spark.datapipe import similarity
     from scalecast_spark.datapipe.similarity import ivfpq_search_batch
 
     cp, bp, rp, emb = index_art
@@ -373,18 +375,20 @@ def test_batch_driver_tables_match_inplan(index_art, residual, monkeypatch):
             ).collect()
         )
 
-    monkeypatch.setenv("SPARK_GRAFT_BATCH_ADC_DRIVER", "0")
-    legacy = run()
-    monkeypatch.delenv("SPARK_GRAFT_BATCH_ADC_DRIVER")
+    with monkeypatch.context() as mp:
+        mp.setattr(similarity, "_batch_qx_driver", lambda *a: None)
+        legacy = run()
     assert run() == legacy
 
 
 def test_batch_driver_tables_degenerate_fallback(index_art, monkeypatch):
     """A NULL query vector must not break the batch path: the driver
     table builder declines (SQL NULL semantics belong in-plan) and
-    the call transparently produces EXACTLY what the legacy in-plan
-    form produces for the same query set — including its NULL-scored
-    rows for the NULL query."""
+    the call transparently produces EXACTLY what the in-plan form
+    produces for the same query set — including its NULL-scored rows
+    for the NULL query. The in-plan oracle runs with
+    ``_batch_qx_driver`` patched to decline outright."""
+    from scalecast_spark.datapipe import similarity
     from scalecast_spark.datapipe.similarity import ivfpq_search_batch
 
     cp, bp, _, emb = index_art
@@ -410,9 +414,9 @@ def test_batch_driver_tables_degenerate_fallback(index_art, monkeypatch):
             ).collect()
         )
 
-    monkeypatch.setenv("SPARK_GRAFT_BATCH_ADC_DRIVER", "0")
-    legacy = run()
-    monkeypatch.delenv("SPARK_GRAFT_BATCH_ADC_DRIVER")
+    with monkeypatch.context() as mp:
+        mp.setattr(similarity, "_batch_qx_driver", lambda *a: None)
+        legacy = run()
     got = run()
     assert got == legacy
     good_qids = {r[0] for r in got if r[2] is not None}
