@@ -1469,10 +1469,11 @@ def q_dedup_minhash_sigs(spark, sf_dir):
     # partial-aggregate map-side, so the shuffle carries n_docs x
     # n_hashes longs. Beats the interpreted-HOF projection twin ~3x
     # locally; values identical (covered by tests).
-    # PLAN-SHAPE NOTE: word_shingles keeps explode(shingle_array(...))
-    # INLINE in one Generate; materializing the array in a separate
-    # select first measured ~4 s slower at sf0.1 (the split projection
-    # defeats the collapsed Generate codegen).
+    # PLAN-SHAPE NOTE: word_shingles projects the WORDS array in its own
+    # select and builds the shingles inside the Generate; the Generate
+    # is interpreted, so an inline split chain would run once per
+    # reference. (Materializing the whole SHINGLE array first instead
+    # measured ~4 s slower at sf0.1.)
     return minhash_signatures(word_shingles(_docs(spark, sf_dir), 3), n_hashes=4)
 
 
@@ -1495,12 +1496,11 @@ def q_dedup_jaccard_pairs(spark, sf_dir):
     )
 
     docs = _docs(spark, sf_dir)
-    # signature stage: INLINE explode(shingle_array) via word_shingles —
-    # one collapsed Generate. (Round-2 shared a materialized array
-    # select between this branch and the verify join via ReusedExchange;
-    # that split projection measured ~4 s SLOWER at sf0.1 than simply
-    # building the array twice, because it defeats the collapsed
-    # Generate codegen. Sharing is not free.)
+    # signature stage: word_shingles splits each doc's words once, then
+    # lsh_candidate_pairs buckets with one aggregation, so the signature
+    # plan runs once. (Sharing a materialized SHINGLE array between this
+    # branch and the verify join via ReusedExchange measured ~4 s SLOWER
+    # at sf0.1 than building the array twice. Sharing is not free.)
     sh = word_shingles(docs, 3)
     sigs = minhash_signatures(sh, n_hashes=4)
     cands = lsh_candidate_pairs(sigs, bands=4)

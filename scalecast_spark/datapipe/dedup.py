@@ -5,9 +5,9 @@ Strategy notes (scale first):
     (hash, doc_id) pairs only — never document bodies.
   * minhash: per-doc signature via explode(shingles) → groupBy(doc) of
     per-permutation minima. The shingle explosion is map-side; the
-    shuffle reduces to n_docs × n_hashes longs. LSH banding then joins
-    docs on (band, band-signature) buckets so the candidate-pair join
-    touches only colliding docs — the classic sub-quadratic path.
+    shuffle reduces to n_docs × n_hashes longs. LSH banding then groups
+    docs into (band, band-signature) buckets and pairs only the members
+    of each bucket — the classic sub-quadratic path.
   * verification: exact n-gram Jaccard on candidate pairs only.
   * simhash: 64-bit sign-aggregated fingerprint; near-dups differ in
     few bits; bucket on 16-bit chunks for sub-quadratic candidate gen.
@@ -66,34 +66,41 @@ def dedup_exact(
     )
 
 
+def _shingles_of_words(words, n: int = 3):
+    """Column expression: distinct word n-gram shingles of a words-array
+    column (docs shorter than ``n`` words yield one shingle of all
+    their words, matching the classic shingling convention)."""
+    from scalecast_spark.datapipe.text import ngram_chain
+
+    acc = ngram_chain(words, n)
+    # short docs (< n words): one shingle of the full word list
+    short = F.array(F.array_join(words, " "))
+    return F.filter(
+        F.array_distinct(F.when(F.size(words) >= n, acc).otherwise(short)),
+        lambda s: F.length(s) > 0,
+    )
+
+
 def shingle_array(text_col, n: int = 3):
     """Column expression: distinct word n-gram shingles of a text
-    column as an array (docs shorter than ``n`` words yield one shingle
-    of all their words, matching the classic shingling convention).
+    column as an array (see :func:`_shingles_of_words`).
 
     Built as a ZIP-CHAIN of n shifted slices, NOT as
     ``transform(indices, i -> slice(words, i, n))``: HOF lambdas are
     interpreted with no common-subexpression elimination, so a lambda
     body referencing ``words`` re-evaluates the whole
     regexp+split+filter chain PER ELEMENT — measured 20x slower at
-    sf0.1. In the zip-chain every ``words`` reference is a top-level
-    child evaluated once per row.
+    sf0.1. Every ``words`` reference here is a top-level child, which
+    codegen evaluates once per row in a projection — but not inside an
+    interpreted Generate (see :func:`word_shingles`).
 
     Empty words are dropped BEFORE shingling (Spark ``trim`` strips
     only spaces, so a newline-led text otherwise smuggles a phantom ''
     word into its shingles — caught by the hypothesis parity test; the
     DuckDB oracle applies the same list_filter)."""
-    from scalecast_spark.datapipe.text import ngram_chain, split_words
+    from scalecast_spark.datapipe.text import split_words
 
-    words = split_words(normalize_text(text_col))
-    acc = ngram_chain(words, n)
-    # short docs (< n words): one shingle of the full word list — same
-    # output as the old slice-based transform at index 0
-    short = F.array(F.array_join(words, " "))
-    return F.filter(
-        F.array_distinct(F.when(F.size(words) >= n, acc).otherwise(short)),
-        lambda s: F.length(s) > 0,
-    )
+    return _shingles_of_words(split_words(normalize_text(text_col)), n)
 
 
 def word_shingles(
@@ -102,17 +109,30 @@ def word_shingles(
 ) -> DataFrame:
     """Explode each doc into its distinct word n-gram shingles
     → (id, shingle). Pass ``array_col`` to explode a prebuilt
-    :func:`shingle_array` column instead of re-deriving from text."""
-    sh = F.col(array_col) if array_col else shingle_array(F.col(text_col), n)
+    :func:`shingle_array` column instead of re-deriving from text.
+
+    The words array is projected as its own column before the explode:
+    the Generate evaluates its array expression interpreted, with no
+    subexpression elimination, so an inline :func:`shingle_array`
+    would run the regexp/split/filter chain once per ``words``
+    reference (n+3 times per doc)."""
+    from scalecast_spark.datapipe.text import split_words
+
     # single-file sources arrive as ONE partition; spread the explode
     # (the expensive step) across the cluster before it runs. The
     # partition COUNT is explicit: a column-only repartition lets AQE
     # coalesce a byte-small shuffle back to one partition, which
     # serializes the per-row shingle work AQE can't see (verified 6x
     # slowdown at sf0.1).
-    return df.repartition(_spread(df), F.col(id_col)).select(
-        id_col, F.explode(sh).alias("shingle")
-    )
+    src = df.repartition(_spread(df), F.col(id_col))
+    if array_col:
+        sh = F.col(array_col)
+    else:
+        src = src.select(
+            id_col, split_words(normalize_text(F.col(text_col))).alias("_ws")
+        )
+        sh = _shingles_of_words(F.col("_ws"), n)
+    return src.select(id_col, F.explode(sh).alias("shingle"))
 
 
 #: Carter-Wegman mixing constants (odd multipliers < 2^30 so a*x stays
@@ -247,35 +267,33 @@ def _band_buckets(
     ).select(id_col, *extra_cols, "bk.band", "bk.bh")
 
 
-def _pairwise_bucket_join(buckets: DataFrame, id_col: str) -> DataFrame:
-    """All (id_a < id_b) pairs within each (band, bh) bucket."""
-    a = buckets.alias("a")
-    b_ = buckets.alias("b")
-    return a.join(
-        b_,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bh") == F.col("b.bh"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-    ).select(
-        F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-    )
-
-
 def lsh_candidate_pairs(
     signatures: DataFrame,
     bands: int = 4,
     id_col: str = "doc_id",
     max_bucket_size: int | None = None,
 ) -> DataFrame:
-    """Band the signature, bucket-join on (band, band-hash), emit
-    candidate (id_a < id_b) pairs. Only docs sharing a full band
-    collide — the join never goes quadratic in corpus size.
+    """Band the signature, bucket on (band, band-hash), emit candidate
+    (id_a < id_b) pairs. Only docs sharing a full band collide — pair
+    generation never goes quadratic in corpus size.
+
+    Plan: ONE ``groupBy(band, bh)`` collects each bucket's sorted ids
+    (map-side partial, so the signature plan runs once; a self-join of
+    the band table evaluates it once per side). Singleton buckets stop
+    there. The members of the remaining buckets are posexploded, each
+    carrying the ids that follow it, and repartitioned by the pair's
+    first id (the member's own id; the hub in a capped star), so a hot
+    bucket's pairs are generated by every task, not by the one task
+    that owns the bucket. The trailing ``distinct`` drops the repeats
+    of pairs that collide on several bands; that partitioning already
+    clusters it, so it adds no shuffle.
 
     ``max_bucket_size`` caps the per-bucket pair blowup that bucketing
     alone cannot prevent: a template family of n near-identical docs
     shares EVERY band hash, so one bucket emits n²/2 pairs — the
     classic web-crawl dedup straggler, and AQE can't shrink it because
-    the pairs ARE the output. Buckets larger than the cap switch from
+    the pairs ARE the output. Buckets with more than the cap rows
+    (NULL-id rows count toward the size, never pair) switch from
     pairwise to a MIN-ID STAR: the bucket's lowest id becomes the hub
     and each other member pairs with the hub only — O(n) pairs, and
     the downstream transitive closure (duplicate_clusters) still
@@ -284,26 +302,43 @@ def lsh_candidate_pairs(
     missed — vanishingly unlikely in an oversized bucket, since every
     member already agrees with the hub on a full minhash band. Small
     buckets are exact-pairwise as before; ``None`` (default) disables
-    the cap, preserving exact semantics."""
+    the cap, preserving exact semantics.
+
+    Hot-bucket posture: uncapped, a bucket of n members still emits
+    n²/2 pairs, and the one task that owns the bucket collects it and
+    writes its O(n²) member slices into the spread — a one-task
+    straggler at scale under this plan or a self-join plan.
+    ``max_bucket_size`` is the remedy. Measured on 4 cores with sf0.1's
+    5,000 documents plus 3,000 near-identical ones, signatures not
+    cached, warm runs: uncapped (4,541,173 pairs) 1.67-2.00 s here vs
+    1.73-2.21 s for the self-join plan; ``max_bucket_size=100`` (45,672
+    pairs) 0.59-0.70 s vs 0.87-1.06 s."""
     buckets = _band_buckets(signatures, bands, id_col)
-    if max_bucket_size is None:
-        return _pairwise_bucket_join(buckets, id_col).distinct()
-    if max_bucket_size < 2:
+    if max_bucket_size is not None and max_bucket_size < 2:
         raise ValueError(f"max_bucket_size must be >= 2, got {max_bucket_size}")
-    # bucket sizes via a window over the SAME (band, bh) partitioning
-    # the joins below need — one shuffle serves the count and the joins
-    wb = W.partitionBy("band", "bh")
-    sized = buckets.withColumn("_bsz", F.count("*").over(wb))
-    small = sized.filter(F.col("_bsz") <= max_bucket_size).drop("_bsz")
-    big = sized.filter(F.col("_bsz") > max_bucket_size).drop("_bsz")
-    hub = big.groupBy("band", "bh").agg(F.min(id_col).alias("_hub"))
-    star = (
-        big.join(hub, ["band", "bh"])
-        .filter(F.col(id_col) != F.col("_hub"))
-        .select(F.col("_hub").alias("id_a"), F.col(id_col).alias("id_b"))
+    members = (
+        buckets.groupBy("band", "bh")
+        .agg(
+            F.sort_array(F.collect_list(id_col)).alias("_ids"),
+            F.count("*").alias("_n"),
+        )
+        .filter(F.size("_ids") > 1)
+        .select("_ids", "_n", F.posexplode("_ids").alias("_pos", "_id"))
     )
+    later = F.slice(
+        "_ids", F.col("_pos") + 2, F.size("_ids") - F.col("_pos") - 1
+    )
+    id_a, partners = F.col("_id"), later
+    if max_bucket_size is not None:
+        star = F.col("_n") > max_bucket_size
+        id_a = F.when(star, F.element_at("_ids", 1)).otherwise(id_a)
+        partners = F.when(star, F.array("_id")).otherwise(later)
     return (
-        _pairwise_bucket_join(small, id_col).unionByName(star).distinct()
+        members.select(id_a.alias("id_a"), partners.alias("_bs"))
+        .repartition(_spread(signatures), "id_a")
+        .select("id_a", F.explode("_bs").alias("id_b"))
+        .filter(F.col("id_a") < F.col("id_b"))
+        .distinct()
     )
 
 
