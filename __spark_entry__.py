@@ -1467,8 +1467,8 @@ def q_dedup_minhash_sigs(spark, sf_dir):
     # explode + groupBy: the scalar md5 stays in whole-stage codegen
     # (one digest per shingle, slices CSE'd) and the per-doc minima
     # partial-aggregate map-side, so the shuffle carries n_docs x
-    # n_hashes longs. Beats the interpreted-HOF projection twin ~3x
-    # locally; values identical (covered by tests).
+    # n_hashes longs. The signature values are checked against a
+    # pure-Python md5 oracle (tests/test_minhash_signature_oracle.py).
     # PLAN-SHAPE NOTE: word_shingles projects the WORDS array in its own
     # select and builds the shingles inside the Generate; the Generate
     # is interpreted, so an inline split chain would run once per

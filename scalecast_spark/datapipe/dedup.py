@@ -179,9 +179,7 @@ def minhash_signatures(
     """(id, minhash_0..minhash_{n-1}): minima in ONE groupBy pass (all
     aggregates share the shuffle). ONE md5 per shingle row — the
     digest is a scalar column, so whole-stage codegen's subexpression
-    elimination computes it once for all n hash exprs. Same hash scheme
-    as minhash_signatures_projection — signatures from the two physical
-    plans are interchangeable."""
+    elimination computes it once for all n hash exprs."""
     src = shingles.withColumn("_d0", F.md5(F.col("shingle")))
     aggs = [
         F.min(h).alias(f"minhash_{p}")
@@ -195,45 +193,11 @@ def minhash_signatures_projection(
     text_col: str = "text", id_col: str = "doc_id",
     array_col: str | None = None,
 ) -> DataFrame:
-    """Signatures straight from text as a PURE PROJECTION — shingle
-    array built per row, per-permutation minima via
-    array_min(transform(...)). ZERO shuffles (the exploded variant pays
-    one); identical values to minhash_signatures. The preferred plan at
-    any scale when the shingle frame isn't otherwise needed. Pass
-    ``array_col`` to reuse a prebuilt :func:`shingle_array` column."""
-    sh = F.col(array_col) if array_col else shingle_array(F.col(text_col), n)
-    # ONE md5 per shingle: transform(_sh, md5) runs once (its result
-    # feeds exactly one consumer — HOFs get no CSE, so fan-out would
-    # re-evaluate it), then a single F.aggregate pass folds ALL n
-    # minima simultaneously: acc is the n-vector of running minima,
-    # zip_with(least) merges each element's n hashes. The old shape
-    # (n x array_min(transform(...))) re-ran the digest transform per
-    # hash — 4x the md5 work after CollapseProject inlining.
-    out = df.select(id_col, sh.alias("_sh"))
-    digests = F.transform(F.col("_sh"), lambda s: F.md5(s))
-    sentinel = F.lit(int(_M32)).cast("long")
-    init = F.array(*([sentinel] * n_hashes))
-
-    def merge(acc, d):
-        return F.zip_with(
-            acc,
-            F.array(*_hashes_from_digest(d, n_hashes)),
-            lambda x, y: F.least(x, y),
-        )
-
-    # two-step select: the _mh alias is referenced n times below, and
-    # CollapseProject (SPARK-36718) refuses to inline a non-cheap
-    # expression with multiple references — verified in the plan: ONE
-    # aggregate(transform(...)) evaluation feeds all n element_at's.
-    merged = out.filter(F.size("_sh") > 0).select(
-        id_col, F.aggregate(digests, init, merge).alias("_mh")
-    )
-    return merged.select(
-        id_col,
-        *[
-            F.element_at(F.col("_mh"), p + 1).alias(f"minhash_{p}")
-            for p in range(n_hashes)
-        ],
+    """Signatures straight from a text frame: :func:`minhash_signatures`
+    over :func:`word_shingles` (pass ``array_col`` to reuse a prebuilt
+    :func:`shingle_array` column)."""
+    return minhash_signatures(
+        word_shingles(df, n, text_col, id_col, array_col), n_hashes, id_col
     )
 
 
@@ -347,93 +311,37 @@ def jaccard_pairs(
     candidates: DataFrame | None = None,
     id_col: str = "doc_id",
     min_jaccard: float = 0.0,
-    broadcast_candidates: bool = True,
 ) -> DataFrame:
-    """Exact n-gram Jaccard for (id_a, id_b) pairs.
+    """Exact set Jaccard of the (id, shingle) rows of doc pairs that
+    share at least one shingle -> (id_a, id_b, inter, jaccard).
 
-    With ``candidates`` (the LSH path) the candidate pairs DRIVE the
-    join: shingles of id_a attach to each pair, then match against
-    shingles of id_b — work is linear in |candidates| x doc size, and
-    the shared-shingle self-join (hot-shingle quadratic expansion at
-    corpus scale) never runs. Without candidates, pairs form via the
-    shared-shingle self-join — still sub-quadratic because only docs
-    sharing >=1 shingle ever meet, but use the LSH path at scale.
+    Each shingle is hashed to a long (collision odds ~ |doc|^2 / 2^64),
+    one ``groupBy(id)`` collects each doc's distinct hashes into an
+    array, and :func:`jaccard_pairs_arrays` verifies the pairs. Repeated
+    (id, shingle) rows count once.
 
-    ``broadcast_candidates`` (default): the candidate set and its
-    shingle expansion are near-dup-rate-bounded — tiny next to the
-    corpus — so both candidate-driven joins run as broadcast hash
-    joins and the CORPUS shingle frame is never shuffled at all (the
-    two plain joins would otherwise repartition it twice: once by
-    id_a, once by (id_b, hash)). Set False only when near-dups are a
-    large fraction of the corpus (then the expanded candidate side
-    stops fitting in an executor and the shuffle join is the right
-    plan — AQE picks sides by size).
+    With ``candidates`` (the LSH path) only those pairs are verified;
+    ``candidates`` is read once, so its upstream plan runs once. Pairs
+    that share no shingle, or name an id without shingle rows, are not
+    emitted. Without ``candidates``, the pairs (id_a < id_b) come from a
+    self-join on the shingle hash: only docs sharing a shingle meet, but
+    a hot shingle still expands quadratically, so use the LSH path at
+    scale.
     """
-    if candidates is not None:
-        # join on a 64-bit shingle hash, not the string — joins carry
-        # longs; intersection counts are unchanged (collision odds
-        # ~ |doc|^2 / 2^64). Caching the HASHED projection (two longs
-        # per row) instead of the string frame makes the explode run
-        # once for all three consumers at ~1/10 the cache-fill bytes.
-        # The _invocation_salt keeps the cache INVOCATION-scoped: a
-        # pure-SQL plan would otherwise be served warm to a later
-        # identical call (r15 verdict #2) — the salt makes each call's
-        # plan unique, so _scratch_cache swaps instead of reusing.
-        hashed = _scratch_cache(
-            "jaccard_shingles",
-            shingles.select(
-                id_col, F.xxhash64("shingle").alias("_sh"),
-                _invocation_salt(),
-            ).cache(),
-        ).drop("_inv_salt")
-        sizes = hashed.groupBy(id_col).agg(F.count("*").alias("sz"))
-        sh_a = hashed.select(F.col(id_col).alias("id_a"), "_sh")
-        sh_b = hashed.select(F.col(id_col).alias("id_b"), "_sh")
-        cand = F.broadcast(candidates) if broadcast_candidates else candidates
-        inter = (
-            cand.join(sh_a, "id_a")
-            .join(sh_b, ["id_b", "_sh"])
-            .groupBy("id_a", "id_b")
-            .agg(F.count("*").alias("inter"))
+    hashed = shingles.select(id_col, F.xxhash64("shingle").alias("_sh"))
+    if candidates is None:
+        a = hashed.select(F.col(id_col).alias("id_a"), "_sh")
+        b = hashed.select(F.col(id_col).alias("id_b"), "_sh")
+        candidates = (
+            a.join(b, "_sh")
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b")
+            .distinct()
         )
-    else:
-        # 3 consumers (sizes + both self-join sides) → cache the
-        # exploded frame so it computes once; invocation-salted like
-        # the candidate branch so no later call times a warm hit
-        shingles = _scratch_cache(
-            "jaccard_shingles",
-            shingles.withColumn("_inv_salt", _invocation_salt()).cache(),
-        ).drop("_inv_salt")
-        sizes = shingles.groupBy(id_col).agg(F.count("*").alias("sz"))
-        a = shingles.alias("a")
-        b = shingles.alias("b")
-        inter = (
-            a.join(
-                b,
-                (F.col("a.shingle") == F.col("b.shingle"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-            .groupBy(
-                F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-            )
-            .agg(F.count("*").alias("inter"))
-        )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
-    out = (
-        inter.join(F.broadcast(sa), "id_a")
-        .join(F.broadcast(sb), "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 6
-            ),
-        )
-        .select("id_a", "id_b", "inter", "jaccard")
-    )
-    if min_jaccard > 0:
-        out = out.filter(F.col("jaccard") >= min_jaccard)
-    return out
+    arrays = hashed.groupBy(id_col).agg(F.collect_set("_sh").alias("_sh_arr"))
+    return jaccard_pairs_arrays(
+        arrays, candidates, id_col, "_sh_arr", min_jaccard
+    ).filter(F.col("inter") > 0)
 
 
 def jaccard_pairs_arrays(
@@ -443,18 +351,16 @@ def jaccard_pairs_arrays(
     array_col: str = "_sh_arr",
     min_jaccard: float = 0.0,
 ) -> DataFrame:
-    """Exact Jaccard for candidate pairs from the PER-DOC shingle-array
-    form — the preferred verify plan when a :func:`shingle_array`
-    column already exists.
+    """Exact Jaccard for candidate pairs from PER-DOC arrays of distinct
+    shingles: a :func:`shingle_array` column, or the hashed arrays
+    :func:`jaccard_pairs` collects from an exploded shingle frame.
 
     Two joins attach each side's array to the pair, then one
-    ``array_intersect`` per pair computes |A∩B| in-stage — the
-    pair×shingle row EXPLOSION of the exploded-frame plan (|candidates|
-    × doc_size rows through a shuffle + groupBy) never happens; per
-    pair it's one O(|A|+|B|) hash-set probe inside codegen. Join
-    strategy is left to AQE: the array side prunes to candidate docs
-    (dup-rate-bounded), so it broadcasts when small and degrades to a
-    shuffle join — never a corpus-wide shuffle — when not.
+    ``array_intersect`` per pair computes |A∩B| in-stage — one
+    O(|A|+|B|) hash-set probe per pair inside codegen; no pair×shingle
+    rows go through a shuffle. Join strategy is left to AQE: it
+    broadcasts the array side when small and shuffles it when not.
+    Candidate pairs that share no shingle come out with ``inter`` 0.
     """
     sz = F.size(F.col(array_col))
     arr_a = arrays.select(

@@ -13,9 +13,11 @@ before the explode. The inline ``explode(shingle_array(...))`` form it
 replaced (with the ``shingle_array`` body of that form) is the oracle;
 rows must be identical on edge texts.
 
-Lane 3 — static plan guard: in the executed plan of
+Lane 3 — static plan guards: in the executed plan of
 ``lsh_candidate_pairs(minhash_signatures(word_shingles(docs)))`` the
-signature aggregate and the word split each appear once.
+signature aggregate and the word split each appear once; verifying
+those candidates with ``jaccard_pairs`` keeps one signature aggregate
+and reads no cached relation.
 """
 
 import random
@@ -26,6 +28,7 @@ from pyspark.sql import Window as W, functions as F
 from scalecast_spark.datapipe.dedup import (
     _band_buckets,
     _spread,
+    jaccard_pairs,
     lsh_candidate_pairs,
     minhash_signatures,
     normalize_text,
@@ -265,18 +268,42 @@ def test_word_shingles_match_inline_explode(spark, n):
 # ---------------------------------------------------------------- plan guard
 
 
-def test_minhash_chain_plan_evaluates_each_step_once(spark):
-    docs = spark.createDataFrame(
+def _plan_guard_docs(spark):
+    return spark.createDataFrame(
         [(i, f"{BASE} tag{i % 4} word{i}") for i in range(60)],
         "doc_id long, text string",
     )
+
+
+def _final_plan(df):
+    """Tree string of the executed plan after one ``collect``."""
+    assert df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()  # the final plan after the collect
+    return plan.treeString()
+
+
+def _partial_min_count(text):
+    return sum("partial_min(" in line for line in text.splitlines())
+
+
+def test_minhash_chain_plan_evaluates_each_step_once(spark):
+    docs = _plan_guard_docs(spark)
     cands = lsh_candidate_pairs(
         minhash_signatures(word_shingles(docs, 3), n_hashes=4), bands=4
     )
-    assert cands.collect()
-    plan = cands._jdf.queryExecution().executedPlan()
-    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-        plan = plan.executedPlan()  # the final plan after the collect
-    text = plan.treeString()
-    assert sum("partial_min(" in line for line in text.splitlines()) == 1, text
+    text = _final_plan(cands)
+    assert _partial_min_count(text) == 1, text
     assert text.count("regexp_replace(") == 1, text
+
+
+def test_lsh_verify_plan_reads_candidates_once_uncached(spark):
+    sh = word_shingles(_plan_guard_docs(spark), 3)
+    pairs = jaccard_pairs(
+        sh, lsh_candidate_pairs(minhash_signatures(sh, n_hashes=4), bands=4)
+    )
+    text = _final_plan(pairs)
+    assert _partial_min_count(text) == 1, text
+    assert "InMemoryRelation" not in text, text
+    assert "InMemoryTableScan" not in text, text

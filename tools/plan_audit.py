@@ -230,7 +230,13 @@ def _scalar_bcast_count(plan: str) -> int:
     return n
 
 
+#: Spark expression ids (``cell#2756``, ``count#12L``) renumber on every
+#: run; they are stripped so a re-run only changes PLANS.md when a plan does
+_EXPR_ID = re.compile(r"#\d+L?\b")
+
+
 def audit_plan(plan: str) -> dict:
+    plan = _EXPR_ID.sub("", plan)
     bnlj_total = len(
         re.findall(r"BroadcastNestedLoopJoin|CartesianProduct", plan)
     )
