@@ -1804,7 +1804,7 @@ def q_ts_ridge(spark, sf_dir):
 
 def q_ts_backtest_kernel(spark, sf_dir):
     """ONE-PASS rolling-origin backtest of a kernel estimator
-    (pipeline.backtest_kernel_models / kernel.run_kernel_backtest):
+    (pipeline.backtest_kernel_models over kernel.run_kernel_cv):
     2 iterations × 5-step recursive OLS holdout, every iteration
     sliced+refit inside the series task — n_iter scans collapse to
     one. Hash-matched: the oracle replays each iteration's centered
@@ -2038,11 +2038,10 @@ def q_ts_forecast_networks(spark, sf_dir):
 def q_ts_cv_grid(spark, sf_dir):
     """Rolling-origin cross-validation over a 12-cell ridge grid
     (4 alphas x 3 normalizers), k=3 folds — the CV-bearing benchmark
-    path (VERDICT r1 next-round #3). The whole grid evaluates in ONE
-    Spark job per fold (kernel.run_kernel_grid: one data pass, all 12
-    ridge fits amortized inside each series task); the 3 fold jobs run
-    concurrently (functions/parallel.py) and each reduces Spark-side to
-    |grid| rows. HASH-MATCHED since round 4: one-step-ahead validation
+    path. The whole (fold × grid) matrix evaluates in ONE Spark job
+    (kernel.run_kernel_cv: one data pass, every fold sliced and all 12
+    ridge fits amortized inside each series task), reduced Spark-side
+    to k × |grid| score rows. HASH-MATCHED: one-step-ahead validation
     makes every fold x cell a closed-form ridge fit + linear
     predictions, replayed end-to-end by _cv_grid_oracle (centered
     normal equations, normalizer scales on the Gram, 4x4 Cramer,

@@ -566,7 +566,7 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits:
 #: internal scratch caches, at most ONE live per tag: each new call
 #: swaps out (unpersists) the previous call's entry, so long-lived
 #: sessions looping over corpora never accumulate pinned cache
-#: entries (r11 verdict: soft memory leak under repeated calls)
+#: entries
 _SCRATCH_CACHES: dict = {}
 
 _INVOCATION_COUNTER = __import__("itertools").count(1)
@@ -576,8 +576,8 @@ def _invocation_salt():
     """A per-call unique literal column (``_inv_salt``): adding it to
     a cached projection makes the plan unique to THIS invocation, so
     Spark's CacheManager can never serve the entry warm to a later
-    identical call (a min-of-N bench pass must recompute from the
-    inputs every pass — r15 verdict #2), while the entry still serves
+    identical call (each call computes from its inputs), while the
+    entry still serves
     every consumer derived from the same frame WITHIN the call. The
     column is constant per row, so it run-length-encodes to nothing
     in the InMemoryRelation; callers drop it right after caching."""
@@ -945,10 +945,10 @@ def cross_dedup(
     )
     # the candidate frame feeds three joins below — materialize once so
     # the band pipeline (and the existing-side scan it contains) does
-    # not replay per consumer. localCheckpoint truncates the lineage; a
-    # salted scratch cache measured 34-37% slower end to end, because
-    # its InMemoryRelation re-plans the full band-join lineage per
-    # consumer. The pinned RDD is a KB-sized id-pair table per call.
+    # not replay per consumer. localCheckpoint truncates the lineage,
+    # where a cache's InMemoryRelation would re-plan the full band-join
+    # lineage per consumer (34-37% slower end to end at sf0.1). The
+    # pinned RDD is a KB-sized id-pair table per call.
     cands = cands.localCheckpoint(eager=False)
     # candidate-driven verify: filter BOTH corpora down to candidate
     # ids BEFORE building shingle arrays — the shingle cost is

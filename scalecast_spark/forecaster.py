@@ -1207,32 +1207,15 @@ class Forecaster:
         estimator + manual_forecast kwargs when the estimator is
         kernel-backed and every kwarg maps onto its factory — the
         routing test for the fused test+full pass (run_kernel_testfull).
-        Mirrors _grid_cells' conventions exactly: normalizer/
-        dynamic_testing defaults come from the MODEL function's
-        signature, an unexpected hyperparameter TypeErrors the factory
-        and falls back (return None) to the generic two-pass path."""
-        import inspect
-
-        from scalecast_spark.models import KERNEL_FACTORIES, MODELS
+        Otherwise None: the generic two-pass path takes the call."""
+        from scalecast_spark.models import KERNEL_FACTORIES, kernel_cell
 
         if self.estimator not in KERNEL_FACTORIES:
             return None
-        p = {k: v for k, v in kwargs.items() if k != "Xvars"}
         try:
-            sig = inspect.signature(MODELS[self.estimator]).parameters
-            default_norm = (
-                sig["normalizer"].default if "normalizer" in sig else None
+            return kernel_cell(
+                self.estimator, {k: v for k, v in kwargs.items() if k != "Xvars"}
             )
-            default_dyn = (
-                sig["dynamic_testing"].default
-                if "dynamic_testing" in sig else True
-            )
-        except (TypeError, ValueError):
-            default_norm, default_dyn = None, True
-        norm = p.pop("normalizer", default_norm)
-        dyn = p.pop("dynamic_testing", default_dyn)
-        try:
-            return KERNEL_FACTORIES[self.estimator](**p), norm, dyn
         except TypeError:
             return None
 
@@ -1712,9 +1695,10 @@ class Forecaster:
     def _grid_cells(self, dynamic_tuning):
         """(fit_fn, normalizer, dynamic_testing) triples for the whole
         grid, or None when the grid can't be batch-evaluated (non-kernel
-        estimator, custom optimizer that collects per-series values, or
-        per-cell Xvars changing the design matrix)."""
-        from scalecast_spark.models import KERNEL_FACTORIES, MODELS
+        estimator, custom optimizer that collects per-series values,
+        per-cell Xvars changing the design matrix, or a grid key the
+        kernel factory does not take — the generic path handles it)."""
+        from scalecast_spark.models import KERNEL_FACTORIES, kernel_cell
 
         how = getattr(self, "_optimize_on", "mean")
         if (
@@ -1724,38 +1708,28 @@ class Forecaster:
             or any("Xvars" in p for p in self.grid)
         ):
             return None
-        import inspect
-
         try:
-            sig = inspect.signature(MODELS[self.estimator]).parameters
-            default_norm = (
-                sig["normalizer"].default if "normalizer" in sig else None
-            )
-        except (TypeError, ValueError):
-            default_norm = None
-        cells = []
-        for params in self.grid:
-            p = dict(params)
-            norm = p.pop("normalizer", default_norm)
-            dyn = p.pop("dynamic_testing", dynamic_tuning)
-            try:
-                cells.append((KERNEL_FACTORIES[self.estimator](**p), norm, dyn))
-            except TypeError:  # unexpected param — generic path handles it
-                return None
-        return cells
+            return [
+                kernel_cell(self.estimator, params, dynamic_tuning)
+                for params in self.grid
+            ]
+        except TypeError:
+            return None
 
     def _eval_cv_kernel(
         self, base: DataFrame, cells, k: int, test_length: int, space: int,
         aside: int, train_length: int | None, n_series: int | None = None,
-    ) -> list[list[float]]:
+    ) -> tuple[list[list[float]], list[tuple[int, int, str]]]:
         """Score the whole (fold × grid) matrix in ONE Spark job: the CV
-        kernel emits (fold, cell, series, y, forecast) for every
-        holdout row, metrics reduce per (fold, cell, series), and the
-        optimize_on rule reduces again per (fold, cell) — k × |grid|
-        rows reach the driver. Returns scores[grid_index][fold].
-        ``n_series`` lets the kernel split tasks across
-        (series × fold × cell-chunk) when series alone underfills the
-        cluster (r12 verdict #2)."""
+        kernel emits (fold, cell, series, ds, y, forecast, error) for
+        every holdout row, metrics reduce per (fold, cell, series), and
+        the optimize_on rule reduces again per (fold, cell) over the
+        series whose fit succeeded — about k × |grid| rows reach the
+        driver. Returns ``(scores, failed)``: scores[grid_index][fold],
+        and the sorted (fold, cell, first message) of every fold × cell
+        whose fit raised on some series. ``n_series`` lets the kernel
+        split tasks across (series × fold × cell-chunk) when series
+        alone underfills the cluster."""
         from scalecast_spark.models.kernel import run_kernel_cv
 
         out = run_kernel_cv(
@@ -1764,21 +1738,30 @@ class Forecaster:
         )
         how = getattr(self, "_optimize_on", "mean")
         mcol = self.validation_metric
+        # a window's _error is constant over its rows, so as a group key
+        # it splits each (fold, cell) into its fitted series (NULL) and
+        # one group per failure message
         per = METRICS.evaluate(
             out, actual=Y, forecast="forecast",
-            by=["_fold", "_cell", SERIES], metrics=[mcol],
+            by=["_fold", "_cell", SERIES, "_error"], metrics=[mcol],
         )
         if how in self.OPTIMIZER_FUNCS:
-            agg = {"mean": F.avg, "min": F.min, "max": F.max}[how](mcol)
-            rows = per.groupBy("_fold", "_cell").agg(agg.alias(mcol)).collect()
+            score = {"mean": F.avg, "min": F.min, "max": F.max}[how](mcol)
         else:  # a series_id — optimize on that one series
-            rows = (
-                per.filter(F.col(SERIES) == how)
-                .select("_fold", "_cell", mcol)
-                .collect()
-            )
-        by_cell = {(r["_fold"], r["_cell"]): r[mcol] for r in rows}
-        return [
+            score = F.max(F.when(F.col(SERIES) == how, F.col(mcol)))
+        rows = per.groupBy("_fold", "_cell", "_error").agg(
+            score.alias(mcol)
+        ).collect()
+        by_cell = {
+            (r["_fold"], r["_cell"]): r[mcol]
+            for r in rows if r["_error"] is None
+        }
+        errors: dict = {}
+        for r in rows:
+            if r["_error"] is not None:
+                key = (r["_fold"], r["_cell"])
+                errors[key] = min(errors.get(key, r["_error"]), r["_error"])
+        scores = [
             [
                 float(by_cell[(fold, ci)])
                 if by_cell.get((fold, ci)) is not None else float("nan")
@@ -1786,6 +1769,7 @@ class Forecaster:
             ]
             for ci in range(len(cells))
         ]
+        return scores, sorted((f, c, m) for (f, c), m in errors.items())
 
     def cross_validate(
         self, k: int = 5, test_length: int | None = None,
@@ -1812,7 +1796,10 @@ class Forecaster:
         otherwise each fold is a FILTER over the cached feature frame
         and all (grid × fold) cells are independent Spark actions,
         submitted CONCURRENTLY from a bounded driver thread pool
-        (run_jobs docstring).
+        (run_jobs docstring). On the kernel path a fit that raises
+        scores its (fold, grid cell) without that window; one
+        RuntimeWarning names the estimator, the first failing cell's
+        params and its exception.
         """
         if self.grid is None:
             # the reference auto-ingests the estimator's grid from the
@@ -1861,11 +1848,11 @@ class Forecaster:
             # fits) — CV cost is one scan + one shuffle regardless of
             # k or |grid|; the driver receives k × |grid| score rows.
             # No cache: the job reads base exactly once. Per-cell fit
-            # failures score NaN inside the kernel; a job-level failure
-            # degrades to an all-NaN matrix like the generic path's
-            # on_error="nan".
+            # failures score NaN inside the kernel and are reported in
+            # one RuntimeWarning; a job-level failure degrades to an
+            # all-NaN matrix like the generic path's on_error="nan".
             try:
-                scores = self._eval_cv_kernel(
+                scores, failed = self._eval_cv_kernel(
                     base, cells, k, test_length, space, aside, train_length,
                     n_series=n_series,
                 )
@@ -1875,8 +1862,6 @@ class Forecaster:
                 # (bad validation_metric, schema drift, py4j error) is
                 # indistinguishable from degenerate data when the later
                 # all-NaN RuntimeError fires
-                import warnings
-
                 warnings.warn(
                     f"kernel CV job failed ({type(e).__name__}: "
                     f"{str(e)[:300]}); scoring all cells NaN",
@@ -1885,6 +1870,17 @@ class Forecaster:
                 scores = [
                     [float("nan")] * k for _ in range(len(self.grid))
                 ]
+            else:
+                if failed:
+                    fold, ci, msg = failed[0]
+                    warnings.warn(
+                        f"cross_validate: {self.estimator} fit raised in "
+                        f"{len(failed)} of {k * len(cells)} (fold, grid "
+                        f"cell) evaluations; first: params "
+                        f"{self.grid[ci]!r}, fold {fold}: {msg}",
+                        RuntimeWarning,
+                        stacklevel=2,
+                    )
         else:
             # |grid| x k jobs share base — cache it for the duration
             base = base.cache()

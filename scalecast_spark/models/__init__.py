@@ -155,10 +155,11 @@ def _kernel_factories():
         make_fit_xgb,
     )
 
-    # NO **kw on these: an unknown grid key must raise TypeError so the
-    # batched-grid path (forecaster._grid_cells) falls back to the
-    # generic per-cell path, which surfaces the same TypeError as a NaN
-    # score — otherwise the two CV physical plans silently diverge
+    # NO **kw on these: an unknown grid key must raise TypeError (via
+    # kernel_cell) so the batched-grid path (forecaster._grid_cells)
+    # falls back to the generic per-cell path, which surfaces the same
+    # TypeError as a NaN score — otherwise the two CV physical plans
+    # silently diverge
     # (cells differing only in the unknown key would fit identically
     # and best_params would be chosen arbitrarily).
     return {
@@ -194,6 +195,31 @@ def _kernel_factories():
 
 
 KERNEL_FACTORIES = _kernel_factories()
+
+
+def kernel_cell(estimator: str, params: dict, dynamic_testing=True) -> tuple:
+    """``(fit_fn, normalizer, dynamic_testing)`` for a kernel-backed
+    estimator and one set of its hyperparameters — the cell every
+    kernel entry point takes. ``normalizer`` and ``dynamic_testing``
+    are read out of ``params``; when absent, the normalizer defaults to
+    the model function's signature default and ``dynamic_testing`` to
+    the argument. Raises KeyError for an estimator without a kernel
+    factory and TypeError for a hyperparameter its factory does not
+    take."""
+    import inspect
+
+    factory = KERNEL_FACTORIES[estimator]
+    try:
+        sig = inspect.signature(MODELS[estimator]).parameters
+    except (TypeError, ValueError):
+        sig = {}
+    p = dict(params)
+    norm = p.pop(
+        "normalizer",
+        sig["normalizer"].default if "normalizer" in sig else None,
+    )
+    dyn = p.pop("dynamic_testing", dynamic_testing)
+    return factory(**p), norm, dyn
 
 # per-estimator MV aliases — the reference MVForecaster accepts every
 # sklearn estimator (models.py:164-420, registry cfg.py:50-54); each

@@ -16,13 +16,18 @@ registry, cfg.py:67-73) is fit on train rows only and applied inside
 the same kernel (models.py:83,105's fit-on-train semantics).
 
 Every entry point (run_kernel, run_kernel_testfull, transfer_kernel,
-run_kernel_grid, run_kernel_cv, run_kernel_backtest) runs its horizon
-through ONE numpy recursion, :func:`_recurse`: the future feature rows
-arrive as a float array, the AR cells of each step's row are
-overwritten from the rolling history by column index, and the step's
-prediction (or the peeked actual) is appended to that history. Pandas
+run_kernel_cv) runs its horizon through ONE numpy recursion,
+:func:`_recurse`: the future feature rows arrive as a float array, the
+AR cells of each step's row are overwritten from the rolling history by
+column index, and the step's prediction (or the peeked actual) is
+appended to that history. Pandas
 slices each series once per fit; the per-step loop touches no pandas
 object, so a horizon step costs the model's predict and little else.
+
+Rolling-origin windows (cross-validation folds, backtest iterations)
+are cut by ONE function, :func:`run_kernel_cv`; it and the test arm of
+:func:`run_kernel_testfull` fit each (history, holdout) window through
+:func:`_holdout_fits`.
 """
 
 from __future__ import annotations
@@ -45,9 +50,8 @@ _AR_RE = re.compile(r"^ar_(\d+)$")
 #: one by name. Populated via models.add_normalizer.
 CUSTOM_NORMALIZERS: dict = {}
 
-#: last run_kernel_cv task-split decision (r14 observability hook for
-#: the multi-tenant width probe): {"n_series", "fold_split",
-#: "chunk_count", "replication"}
+#: last run_kernel_cv task-split decision, read by the width probe:
+#: {"n_series", "fold_split", "chunk_count", "replication"}
 LAST_CV_SPLIT: dict | None = None
 
 
@@ -137,7 +141,7 @@ def _recurse(
         for lag, j in ar_cols:
             if lag <= len(hist):
                 x[j] = hist[-lag]
-        pred = float(predict(norm(x.reshape(1, -1))))
+        pred = float(np.ravel(predict(norm(x.reshape(1, -1))))[0])
         preds[s] = pred
         actual = actuals[s]
         if peek_every and (s + 1) % peek_every == 0 and not np.isnan(actual):
@@ -163,6 +167,41 @@ def _fitted_and_horizon(
             pdf.loc[fut, Y].to_numpy(float), peek_every,
         )
     return fitted
+
+
+def _holdout_fits(
+    obs: pd.DataFrame, hold: pd.DataFrame, feat, ar_cols, cells,
+) -> list[tuple[np.ndarray, Exception | None]]:
+    """Fit every ``(fit_fn, normalizer, dynamic_testing)`` cell on one
+    window's history ``obs`` (its complete rows) and predict the
+    holdout ``hold`` recursively, the history's y seeding the AR cells.
+
+    Returns one ``(forecast, error)`` pair per cell. A history with no
+    more complete rows than features forecasts NaN for every cell; a
+    cell whose fit or predict raises forecasts NaN and returns the
+    exception, and the caller decides whether it fails the task."""
+    nan = np.full(len(hold), np.nan)
+    train = obs.dropna(subset=feat + [Y])
+    if len(train) <= max(len(feat), 1):
+        return [(nan, None)] * len(cells)
+    Xtr = _design(train, feat)
+    ytr = train[Y].to_numpy(float)
+    hist = obs[Y].to_numpy(float)
+    rows = _design(hold, feat)
+    actuals = hold[Y].to_numpy(float)
+    out = []
+    for fit_fn, normalizer, dyn in cells:
+        try:
+            norm = _fit_normalizer(normalizer, Xtr)
+            preds = _recurse(
+                fit_fn(norm(Xtr), ytr), norm, rows, ar_cols, hist, actuals,
+                _peek_every(dyn),
+            )
+        except Exception as e:
+            out.append((nan, e))
+        else:
+            out.append((preds, None))
+    return out
 
 
 def run_kernel(
@@ -277,22 +316,16 @@ def run_kernel_testfull(
         # _mark_test_rows drops real future rows and re-flags the last
         # test_length OBSERVED rows as future; replicate that slicing.
         if test_length:
-            n = len(obs)
-            cut = max(n - test_length, 0)
-            pre = obs.iloc[:cut]
-            hold = obs.iloc[cut:]
+            cut = max(len(obs) - test_length, 0)
+            pre, hold = obs.iloc[:cut], obs.iloc[cut:]
+            (preds, err), = _holdout_fits(
+                pre, hold, feat, ar_cols, [(fit_fn, normalizer, dynamic_testing)]
+            )
+            if err is not None:
+                raise err
             t_out = hold[[SERIES, DS, Y]].copy()
             t_out[IS_FUTURE] = 1
-            train_t = pre.dropna(subset=feat + [Y])
-            if len(train_t) <= max(len(feat), 1):
-                t_out["forecast"] = np.nan
-            else:
-                norm_t, predict_t = _fit(fit_fn, normalizer, train_t, feat)
-                t_out["forecast"] = _recurse(
-                    predict_t, norm_t, _design(hold, feat), ar_cols,
-                    pre[Y].to_numpy(float), hold[Y].to_numpy(float),
-                    peek_every,
-                )
+            t_out["forecast"] = preds
             t_out["_arm"] = "test"
             outs.append(t_out)
 
@@ -369,86 +402,6 @@ def transfer_kernel(
     return dst_df.join(preds, on=[SERIES, DS], how="left")
 
 
-def run_kernel_grid(
-    df: DataFrame,
-    features: list[str],
-    cells: list[tuple],
-    default_dynamic: bool | int = False,
-) -> DataFrame:
-    """Evaluate a WHOLE hyperparameter grid in ONE kernel pass.
-
-    ``cells`` is a list of ``(fit_fn, normalizer, dynamic_testing)``
-    triples (``dynamic_testing=None`` → ``default_dynamic``). Returns
-    the future-row predictions of every cell:
-    ``(series, ds, _cell, y, forecast)``.
-
-    This is the scale-correct CV physical plan: one job reads each
-    fold's data ONCE and fits all grid cells per series inside the
-    task (the per-cell numpy fits are microseconds next to the scan +
-    shuffle that dominate at 100 TB), instead of one Spark job — one
-    full data pass — per (grid × fold) cell. Semantics are identical
-    to looping :func:`run_kernel` per cell: same train mask, same
-    fit-on-train normalizers, same recursive AR overwrite.
-    """
-    cells = [
-        (fn, _resolve_normalizer(nz), default_dynamic if dt is None else dt)
-        for fn, nz, dt in cells
-    ]
-    feat = list(features)
-    ar_cols = _ar_columns(feat)
-
-    schema = T.StructType(
-        [
-            T.StructField(SERIES, df.schema[SERIES].dataType),
-            T.StructField(DS, df.schema[DS].dataType),
-            T.StructField("_cell", T.IntegerType()),
-            T.StructField(Y, T.DoubleType()),
-            T.StructField("forecast", T.DoubleType()),
-        ]
-    )
-
-    def fit_predict(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(DS).reset_index(drop=True)
-        obs = pdf[pdf[IS_FUTURE] == 0]
-        train = obs.dropna(subset=feat + [Y])
-        fut_idx = pdf.index[pdf[IS_FUTURE] == 1].tolist()
-        base = pdf.loc[fut_idx, [SERIES, DS, Y]].reset_index(drop=True)
-        outs = []
-        if len(train) <= max(len(feat), 1):
-            for ci in range(len(cells)):
-                o = base.copy()
-                o["_cell"] = ci
-                o["forecast"] = np.nan
-                outs.append(o)
-            return pd.concat(outs, ignore_index=True)[
-                [SERIES, DS, "_cell", Y, "forecast"]
-            ]
-        Xtr = _design(train, feat)
-        ytr = train[Y].to_numpy(float)
-        hist0 = obs[Y].to_numpy(float)
-        fut_rows = _design(pdf.loc[fut_idx], feat)
-        fut_actuals = pdf.loc[fut_idx, Y].to_numpy(float)
-        for ci, (fit_fn, normalizer, dyn) in enumerate(cells):
-            norm = _fit_normalizer(normalizer, Xtr)
-            predict = fit_fn(norm(Xtr), ytr)
-            o = base.copy()
-            o["_cell"] = ci
-            o["forecast"] = _recurse(
-                predict, norm, fut_rows, ar_cols, hist0, fut_actuals,
-                _peek_every(dyn),
-            )
-            outs.append(o)
-        return pd.concat(outs, ignore_index=True)[
-            [SERIES, DS, "_cell", Y, "forecast"]
-        ]
-
-    return (
-        df.select(SERIES, DS, IS_FUTURE, Y, *feat)
-        .groupBy(SERIES)
-        .applyInPandas(fit_predict, schema)
-    )
-
-
 def run_kernel_cv(
     df: DataFrame,
     features: list[str],
@@ -461,32 +414,42 @@ def run_kernel_cv(
     default_dynamic: bool | int = False,
     n_series: int | None = None,
 ) -> DataFrame:
-    """ALL k rolling-origin folds × ALL grid cells in ONE kernel pass.
+    """ALL k rolling-origin folds × ALL cells in ONE kernel pass — the
+    one function that cuts a series into (history, holdout) windows.
 
-    Combines :func:`run_kernel_grid` (grid axis inside the task) with
-    :func:`run_kernel_backtest` (rewind axis inside the task): each
-    series task slices its own history per fold (drop the last
-    ``aside + fold*space`` rows, hold out the next ``test_length``),
-    refits every cell, and predicts the holdout recursively. CV cost
-    collapses from k jobs (round 2) or k×|grid| jobs (round 1) to ONE
-    scan + ONE shuffle — at 100 TB the scan dominates, so this is the
-    floor. Fold/slice semantics match cross_validate's DataFrame fold
-    construction row-for-row (asserted by the batched-vs-generic parity
-    test). Emits (fold, cell, series, y, forecast) for holdout rows.
+    Each series task slices its own observed history per fold: drop the
+    last ``aside + fold*space`` rows (keeping at most the last
+    ``train_length + test_length`` when ``train_length`` is set), hold
+    out the last ``test_length`` of what is left, refit every cell on
+    the rest and predict the holdout recursively (:func:`_holdout_fits`).
+    A cell is ``(fit_fn, normalizer, dynamic_testing)``;
+    ``dynamic_testing=None`` takes ``default_dynamic``. Cross-validation
+    scores a grid of one estimator with it, and a rolling-origin
+    backtest (``fcst_length + i*jump_back`` held back at iteration
+    ``i``) is ``k=n_iter, test_length=fcst_length, space=jump_back``
+    with one cell per model. Either way the cost is one scan and one
+    shuffle, whatever k and the cell count. Fold slicing matches
+    cross_validate's DataFrame fold construction row for row (the
+    batched-vs-generic parity tests).
 
-    Task split (r12 verdict #2): grouping by SERIES alone serializes
-    the whole fold × cell matrix inside one Arrow task per series —
-    with 5 reference-shaped series a 32-core cluster idles at 5/32
-    utilization and per-series length growth lands on the wall clock
-    (sf1 ratio 3.5×). When ``n_series`` (pass it — it's one row of an
-    aggregate the caller usually already ran) is below the session's
-    default parallelism, each series' rows are replicated across the
-    FOLD axis and, if still underfilled, round-robin CELL chunks —
-    parallelism becomes (series × fold × cell-chunk). The replication
-    factor is bounded by ceil(cores / n_series), so at ≥cores series
-    (the 100 TB shape) it is exactly 1 and the plan is unchanged:
-    replication only spends shuffle bytes where compute would
-    otherwise idle. Scores are bit-identical either way — the same
+    Emits ``(_fold, _cell, series_id, ds, y, forecast, _error)`` for
+    every holdout row. A window whose history is too short to fit
+    forecasts NaN. A cell whose fit raises forecasts NaN on that
+    (fold, cell) window and carries ``"<ExceptionType>: <message>"`` in
+    ``_error`` (NULL otherwise), so one degenerate fit does not fail the
+    job; callers that must not tolerate it raise on a non-NULL
+    ``_error``.
+
+    Task split: grouping by SERIES alone serializes the whole
+    fold × cell matrix inside one Arrow task per series, so a handful
+    of series leaves most cores idle. When ``n_series`` (pass it — it
+    is one row of an aggregate the caller usually already ran) is below
+    the session's default parallelism, each series' rows are
+    replicated across the FOLD axis and, if still underfilled,
+    round-robin CELL chunks — parallelism becomes
+    (series × fold × cell-chunk). The replication factor is bounded by
+    ceil(cores / n_series), so at ≥cores series it is exactly 1 and the
+    plan is unchanged. Outputs are bit-identical either way — the same
     numpy fits run, just in different tasks.
     """
     cells = [
@@ -507,9 +470,8 @@ def run_kernel_cv(
             tasks *= k
         if tasks < target and n_cells > 1:
             chunk_count = min(n_cells, -(-target // max(tasks, 1)))
-    # observability hook (r14 verdict #7): the replication decision,
-    # inspectable by the width probe / plan-shape tests — replication
-    # factor must be exactly 1 once n_series >= defaultParallelism
+    # the replication decision, for the width probe and plan-shape
+    # tests: the factor is exactly 1 once n_series >= defaultParallelism
     global LAST_CV_SPLIT
     LAST_CV_SPLIT = {
         "n_series": n_series,
@@ -523,10 +485,13 @@ def run_kernel_cv(
             T.StructField("_fold", T.IntegerType()),
             T.StructField("_cell", T.IntegerType()),
             T.StructField(SERIES, df.schema[SERIES].dataType),
+            T.StructField(DS, df.schema[DS].dataType),
             T.StructField(Y, T.DoubleType()),
             T.StructField("forecast", T.DoubleType()),
+            T.StructField("_error", T.StringType()),
         ]
     )
+    names = [f.name for f in schema.fields]
 
     def fit_predict(pdf: pd.DataFrame) -> pd.DataFrame:
         # task scope: with the fold/cell split active, this task owns
@@ -559,48 +524,25 @@ def run_kernel_cv(
             if len(sub) == 0:
                 continue
             cut = max(len(sub) - test_length, 0)
-            obs = sub.iloc[:cut]
-            hold = sub.iloc[cut:]
-            base = hold[[SERIES, Y]].copy().reset_index(drop=True)
-            base.insert(0, "_fold", fold)
-            train = obs.dropna(subset=feat + [Y])
-            if len(train) <= max(len(feat), 1):
-                for ci, _ in my_cells:
-                    o = base.copy()
-                    o.insert(1, "_cell", ci)
-                    o["forecast"] = np.nan
-                    outs.append(o)
-                continue
-            Xtr = _design(train, feat)
-            ytr = train[Y].to_numpy(float)
-            hist0 = obs[Y].to_numpy(float)
-            fut_rows = _design(hold, feat)
-            fut_actuals = hold[Y].to_numpy(float)
-            for ci, (fit_fn, normalizer, dyn) in my_cells:
-                # per-cell failure tolerance: a raising fit (singular
-                # design, k-NN with too few rows, ...) scores THIS
-                # fold x cell NaN instead of failing the whole CV job —
-                # finer-grained than the generic path's per-fold NaN
-                try:
-                    norm = _fit_normalizer(normalizer, Xtr)
-                    predict = fit_fn(norm(Xtr), ytr)
-                    preds = _recurse(
-                        predict, norm, fut_rows, ar_cols, hist0,
-                        fut_actuals, _peek_every(dyn),
-                    )
-                except Exception:
-                    preds = [np.nan] * len(hold)
+            obs, hold = sub.iloc[:cut], sub.iloc[cut:]
+            base = hold[[SERIES, DS, Y]].reset_index(drop=True)
+            fits = _holdout_fits(
+                obs, hold, feat, ar_cols, [c for _, c in my_cells]
+            )
+            for (ci, _), (preds, err) in zip(my_cells, fits):
                 o = base.copy()
+                o.insert(0, "_fold", fold)
                 o.insert(1, "_cell", ci)
                 o["forecast"] = preds
+                o["_error"] = (
+                    None if err is None else f"{type(err).__name__}: {err}"
+                )
                 outs.append(o)
         if not outs:
             return pd.DataFrame(
-                {f.name: pd.Series(dtype=object) for f in schema.fields}
-            )[[f.name for f in schema.fields]]
-        return pd.concat(outs, ignore_index=True)[
-            ["_fold", "_cell", SERIES, Y, "forecast"]
-        ]
+                {c: pd.Series(dtype=object) for c in names}
+            )
+        return pd.concat(outs, ignore_index=True)[names]
 
     src = df.select(SERIES, DS, IS_FUTURE, Y, *feat)
     group_cols = [SERIES]
@@ -616,90 +558,6 @@ def run_kernel_cv(
         )
         group_cols.append("_cellgrp")
     return src.groupBy(*group_cols).applyInPandas(fit_predict, schema)
-
-
-def run_kernel_backtest(
-    df: DataFrame,
-    features: list[str],
-    fit_fn: Callable,
-    fcst_length: int,
-    n_iter: int = 3,
-    jump_back: int = 1,
-    dynamic_testing: bool | int = True,
-    normalizer: str | None = None,
-) -> DataFrame:
-    """Rolling-origin backtest of a kernel estimator in ONE pass.
-
-    Equivalent to calling :func:`run_kernel` on ``n_iter`` rewound
-    copies of the frame (pipeline.backtest's generic loop) but each
-    series is read ONCE: the task slices its own history per iteration,
-    refits, and predicts the holdout recursively. At 100 TB this turns
-    n_iter full scans + shuffles into one — iteration count becomes a
-    per-task numpy loop, not a plan multiplier.
-
-    Features must be built on the FULL frame beforehand (backward-
-    looking lags don't leak: AR cells of holdout rows are overwritten
-    from the rolling prediction history, exactly as run_kernel does for
-    test rows). Returns (iteration, series, ds, y, forecast) over
-    held-out rows only.
-    """
-    normalizer = _resolve_normalizer(normalizer)
-    feat = list(features)
-    ar_cols = _ar_columns(feat)
-    peek_every = _peek_every(dynamic_testing)
-
-    schema = T.StructType(
-        [
-            T.StructField("iteration", T.IntegerType()),
-            T.StructField(SERIES, df.schema[SERIES].dataType),
-            T.StructField(DS, df.schema[DS].dataType),
-            T.StructField(Y, T.DoubleType()),
-            T.StructField("forecast", T.DoubleType()),
-        ]
-    )
-
-    def fit_predict(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = (
-            pdf[pdf[IS_FUTURE] == 0]
-            .sort_values(DS)
-            .reset_index(drop=True)
-        )
-        n = len(pdf)
-        outs = []
-        for it in range(n_iter):
-            hold = fcst_length + it * jump_back
-            cut = n - hold
-            if cut <= max(len(feat), 1):
-                continue
-            train_all = pdf.iloc[:cut]
-            train = train_all.dropna(subset=feat + [Y])
-            hold_rows = pdf.iloc[cut : cut + fcst_length]
-            o = hold_rows[[SERIES, DS, Y]].copy().reset_index(drop=True)
-            o.insert(0, "iteration", it)
-            if len(train) <= max(len(feat), 1):
-                o["forecast"] = np.nan
-                outs.append(o)
-                continue
-            norm, predict = _fit(fit_fn, normalizer, train, feat)
-            o["forecast"] = _recurse(
-                predict, norm, _design(hold_rows, feat), ar_cols,
-                train_all[Y].to_numpy(float), hold_rows[Y].to_numpy(float),
-                peek_every,
-            )
-            outs.append(o)
-        if not outs:
-            return pd.DataFrame(
-                {c.name: pd.Series(dtype="object") for c in schema}
-            )
-        return pd.concat(outs, ignore_index=True)[
-            ["iteration", SERIES, DS, Y, "forecast"]
-        ]
-
-    return (
-        df.select(SERIES, DS, IS_FUTURE, Y, *feat)
-        .groupBy(SERIES)
-        .applyInPandas(fit_predict, schema)
-    )
 
 
 def run_series_kernel(

@@ -899,46 +899,53 @@ def backtest_kernel_models(
     Same result frame as :func:`backtest` (model, iteration, series_id,
     ds, y, forecast over held-out rows), different physical plan: the
     generic loop reruns features + a full kernel pass per iteration
-    (n_iter scans); here features build ONCE on the full frame and
-    ``run_kernel_backtest`` slices/refits every iteration inside each
-    series task — one scan + one shuffle regardless of n_iter.
+    and model; here features build ONCE on the full frame and every
+    model is one cell of a single :func:`run_kernel_cv` pass
+    (``k=n_iter``, ``test_length=fcst_length``, ``space=jump_back``),
+    which slices and refits every iteration inside each series task —
+    one scan + one shuffle regardless of n_iter and the model count.
     Backward-looking features (lags, trend, rolling) are iteration-
-    invariant on the kept rows, so the two plans score identically.
+    invariant on the kept rows, so the two plans score identically;
+    an iteration whose history is too short to fit forecasts NaN on
+    its holdout rows, as in :func:`backtest`. A model whose fit raises
+    fails the action with the exception's message.
 
     ``models``: name -> (estimator registry name, hyperparams).
     """
-    import inspect
-
-    from scalecast_spark.models import KERNEL_FACTORIES, MODELS
-    from scalecast_spark.models.kernel import run_kernel_backtest
+    from scalecast_spark.models import KERNEL_FACTORIES, kernel_cell
+    from scalecast_spark.models.kernel import run_kernel_cv
 
     if IS_FUTURE in series_df.columns:
         # Same observed-history-only guard as backtest(): drop synthetic
         # horizon rows before features so the per-series slices inside
-        # run_kernel_backtest see only real observations.
+        # run_kernel_cv see only real observations.
         series_df = series_df.filter(F.col(IS_FUTURE) == 0)
     df, features = feature_fn(series_df)
     if IS_FUTURE not in df.columns:
         df = df.withColumn(IS_FUTURE, F.lit(0))
-    out = None
-    for name, (est, params) in models.items():
+    cells = []
+    for est, params in models.values():
         if est not in KERNEL_FACTORIES:
             raise ValueError(
                 f"{est!r} is not kernel-backed; use backtest() for it"
             )
-        p = dict(params)
-        sig = inspect.signature(MODELS[est]).parameters
-        default_norm = sig["normalizer"].default if "normalizer" in sig else None
-        norm = p.pop("normalizer", default_norm)
-        dyn = p.pop("dynamic_testing", True)
-        fit_fn = KERNEL_FACTORIES[est](**p)
-        res = run_kernel_backtest(
-            df, features, fit_fn, fcst_length, n_iter, jump_back, dyn, norm
-        ).select(
-            F.lit(name).alias("model"), "iteration", SERIES, DS, Y, "forecast"
-        )
-        out = res if out is None else out.unionByName(res)
-    return out
+        cells.append(kernel_cell(est, params))
+    out = run_kernel_cv(
+        df, features, cells, k=n_iter, test_length=fcst_length,
+        space=jump_back,
+    )
+    model = F.array(*[F.lit(name) for name in models])[F.col("_cell")]
+    # a filter, not a projection, so no column pruning can skip it
+    fit_ok = F.when(F.col("_error").isNull(), F.lit(True)).otherwise(
+        F.raise_error(F.format_string(
+            "backtest_kernel_models: model %s, series %s, iteration %d: %s",
+            model, F.col(SERIES), F.col("_fold"), F.col("_error"),
+        ))
+    )
+    return out.filter(fit_ok).select(
+        model.alias("model"), F.col("_fold").alias("iteration"), SERIES, DS,
+        Y, "forecast",
+    )
 
 
 def backtest_metrics(

@@ -2,11 +2,16 @@
 per-step pandas loop it replaced.
 
 The oracle below is the earlier per-series pandas implementation of the
-six kernel entry points: every horizon step copies the feature row as a
+kernel entry points: every horizon step copies the feature row as a
 pandas Series, overwrites its AR cells by name and converts it back to
 numpy. The engine output must equal it exactly (same arithmetic in the
 same order) on random series with NaN AR warm-up rows, for every
-dynamic_testing mode, normalizer and fit under test.
+dynamic_testing mode, normalizer and fit under test. The rolling-origin
+backtest is checked through ``pipeline.backtest_kernel_models``, which
+runs every model as a cell of one ``run_kernel_cv`` pass; the oracle
+keeps the old per-model slicer, whose skip of too-short iterations
+never applies here (the shortest fixture series keeps 25 history rows
+at the deepest cut).
 """
 
 import numpy as np
@@ -18,8 +23,14 @@ from scalecast_spark.models import kernel as K
 from scalecast_spark.models.sklearn_like import (
     fit_ols, make_fit_knn, make_fit_ridge,
 )
+from scalecast_spark.pipeline import backtest_kernel_models
 
 FITS = {"mlr": fit_ols, "ridge": make_fit_ridge(0.5), "knn": make_fit_knn(3)}
+#: the registry estimator and hyperparameters that build each of FITS
+ESTIMATORS = {
+    "mlr": ("mlr", {}), "ridge": ("ridge", {"alpha": 0.5}),
+    "knn": ("knn", {"n_neighbors": 3}),
+}
 NORMS = [None, "minmax", "scale"]
 DYNS = [True, False, 3]
 FEAT = ["ar_1", "ar_2", "ar_4", "t", "x"]
@@ -156,18 +167,6 @@ def _hold_preds(obs, hold, cells, feat):
         )
 
 
-def oracle_grid(pdf, cells, feat):
-    outs = []
-    for g in _series(pdf):
-        obs, fut = g[g[IS_FUTURE] == 0], g[g[IS_FUTURE] == 1]
-        for ci, preds in _hold_preds(obs, fut, list(enumerate(cells)), feat):
-            o = fut[[SERIES, DS, Y]].copy()
-            o["_cell"] = ci
-            o["forecast"] = preds
-            outs.append(o)
-    return pd.concat(outs, ignore_index=True)
-
-
 def oracle_cv(pdf, cells, feat, k, test_length, space):
     outs = []
     for g in _series(pdf):
@@ -177,7 +176,7 @@ def oracle_cv(pdf, cells, feat, k, test_length, space):
             cut = max(len(sub) - test_length, 0)
             obs, hold = sub.iloc[:cut], sub.iloc[cut:]
             for ci, preds in _hold_preds(obs, hold, list(enumerate(cells)), feat):
-                o = hold[[SERIES, Y]].copy()
+                o = hold[[SERIES, DS, Y]].copy()
                 o["_fold"] = fold
                 o["_cell"] = ci
                 o["forecast"] = preds
@@ -274,18 +273,42 @@ def test_single_model_entry_points_match_oracle(frames, fit, norm, dyn):
     got = K.transfer_kernel(sdf, sdst, FEAT, fn, dyn, norm).toPandas()
     _same(got, oracle_transfer(pdf, pdst, fn, norm, dyn, FEAT), [SERIES, DS])
 
-    got = K.run_kernel_backtest(sdf, FEAT, fn, 5, 3, 2, dyn, norm).toPandas()
+    got = _backtest(sdf, {fit: (fit, norm, dyn)})
     _same(
         got, oracle_backtest(pdf, fn, norm, dyn, FEAT, 5, 3, 2),
         ["iteration", SERIES, DS],
     )
 
 
-def test_grid_matches_oracle_on_every_cell(frames):
+def _backtest(sdf, models):
+    """backtest_kernel_models over the prebuilt FEAT columns, 5-step
+    holdouts, 3 iterations 2 rows apart; ``models``: name -> (FITS key,
+    normalizer, dynamic_testing)."""
+    spec = {}
+    for name, (fit, norm, dyn) in models.items():
+        est, params = ESTIMATORS[fit]
+        spec[name] = (est, {**params, "normalizer": norm, "dynamic_testing": dyn})
+    return backtest_kernel_models(
+        sdf, spec, lambda df: (df, FEAT), fcst_length=5, n_iter=3, jump_back=2,
+    ).toPandas()
+
+
+def test_backtest_models_in_one_pass_match_single_model_oracles(frames):
+    """Three models as cells of one pass: each model's rows equal its
+    own single-model oracle."""
     sdf, pdf, _, _ = frames
-    cells = _cells(ALL_CELLS)
-    got = K.run_kernel_grid(sdf, FEAT, cells).toPandas()
-    _same(got, oracle_grid(pdf, cells, FEAT), ["_cell", SERIES, DS])
+    models = {
+        "a": ("ridge", "minmax", True), "b": ("knn", "scale", 3),
+        "c": ("mlr", None, False),
+    }
+    got = _backtest(sdf, models)
+    assert sorted(got["model"].unique()) == sorted(models)
+    for name, (fit, norm, dyn) in models.items():
+        _same(
+            got[got["model"] == name],
+            oracle_backtest(pdf, FITS[fit], norm, dyn, FEAT, 5, 3, 2),
+            ["iteration", SERIES, DS],
+        )
 
 
 @pytest.mark.parametrize("n_series", [None, 1])
@@ -297,9 +320,8 @@ def test_cv_matches_oracle_on_every_cell(frames, n_series):
         sdf, FEAT, cells, k=3, test_length=5, space=3, n_series=n_series
     ).toPandas()
     want = oracle_cv(pdf, cells, FEAT, 3, 5, 3)
-    # holdout rows carry no ds: the row order inside a (fold, cell,
-    # series) group is the ds order, restored by a stable sort
-    _same(got, want, ["_fold", "_cell", SERIES])
+    _same(got, want, ["_fold", "_cell", SERIES, DS])
+    assert got["_error"].isna().all()
 
 
 def test_recurse_peeks_only_finite_actuals():

@@ -100,8 +100,13 @@ def test_full_pipeline_with_revert(series):
 
 
 def test_backtest_kernel_one_pass_matches_generic(series):
-    """backtest_kernel_models (one scan, per-task iteration loop) must
-    reproduce the generic per-iteration backtest for a kernel model."""
+    """backtest_kernel_models (one scan, per-task iteration loop, every
+    model a cell of the same pass) must reproduce the generic
+    per-iteration backtest for kernel models — including a series too
+    short for its deepest iteration, whose holdout rows the generic
+    backtest emits with a NaN forecast."""
+    import numpy as np
+
     from scalecast_spark.operators.features import add_ar_terms, add_time_trend
     from scalecast_spark.pipeline import backtest_kernel_models
 
@@ -110,20 +115,37 @@ def test_backtest_kernel_one_pass_matches_generic(series):
         df, tt = add_time_trend(df)
         return df, ar + tt
 
-    def mlr_fn(marked):
-        marked, names = feats(marked)
-        return MODELS["mlr"](marked, names)
+    def model_fn(name, **params):
+        def fn(marked):
+            marked, names = feats(marked)
+            return MODELS[name](marked, names, **params)
+        return fn
 
+    # 12 days: iteration 0 fits on 6 complete rows, iteration 1 has too
+    # few (3, one per feature) and iteration 2 only 2 history rows
+    first = series.select(SERIES).orderBy(SERIES).first()[0]
+    short = (
+        series.filter(F.col(SERIES) == first).orderBy(F.desc(DS)).limit(12)
+        .withColumn(SERIES, F.lit("zz_short"))
+    )
+    both = series.unionByName(short)
+    kw = dict(fcst_length=4, n_iter=3, jump_back=3)
     generic = backtest(
-        series, {"mlr": mlr_fn}, fcst_length=4, n_iter=2, jump_back=3
+        both, {"mlr": model_fn("mlr"), "ridge": model_fn("ridge", alpha=0.5)},
+        **kw,
     ).toPandas()
     one_pass = backtest_kernel_models(
-        series, {"mlr": ("mlr", {})}, feats, fcst_length=4, n_iter=2,
-        jump_back=3,
+        both, {"mlr": ("mlr", {}), "ridge": ("ridge", {"alpha": 0.5})}, feats,
+        **kw,
     ).toPandas()
     key = ["model", "iteration", "series_id", "ds"]
     g = generic.sort_values(key).reset_index(drop=True)
     o = one_pass.sort_values(key).reset_index(drop=True)
-    assert len(g) == len(o) == 2 * 5 * 4
-    assert (g["ds"].values == o["ds"].values).all()
-    assert abs(g["forecast"].values - o["forecast"].values).max() < 1e-9
+    assert len(g) == len(o) == 2 * (5 + 1) * 3 * 4
+    assert (g[key].values == o[key].values).all()
+    gf, of = g["forecast"].to_numpy(float), o["forecast"].to_numpy(float)
+    assert (np.isnan(gf) == np.isnan(of)).all()
+    assert abs(gf - of)[~np.isnan(gf)].max() < 1e-9
+    nan_rows = o[np.isnan(of)]
+    assert set(nan_rows[SERIES]) == {"zz_short"}
+    assert sorted(set(nan_rows["iteration"])) == [1, 2]

@@ -235,6 +235,16 @@ def _scalar_bcast_count(plan: str) -> int:
 _EXPR_ID = re.compile(r"#\d+L?\b")
 
 
+def _listed(field: str, plan: str) -> list[str]:
+    """The first two distinct non-empty ``<field>: [...]`` lists of a
+    simple explain. Spark abbreviates a long list with ``...`` and no
+    closing bracket; such a value ends at the ``...`` (kept), not at the
+    next field's bracket."""
+    found = re.findall(rf"{field}: \[(.*?)(\]|\.\.\.)", plan)
+    vals = {v + ("..." if end == "..." else "") for v, end in found}
+    return sorted(vals - {""})[:2]
+
+
 def audit_plan(plan: str) -> dict:
     plan = _EXPR_ID.sub("", plan)
     bnlj_total = len(
@@ -252,12 +262,8 @@ def audit_plan(plan: str) -> dict:
         "sort_merge": len(re.findall(r"\bSortMergeJoin\b", plan)),
         "codegen": len(set(re.findall(r"\*\((\d+)\)", plan))),
         "topk": "TakeOrderedAndProject" in plan,
-        "pushed": sorted(
-            set(re.findall(r"PushedFilters: \[([^\]]*)\]", plan)) - {""}
-        )[:2],
-        "partition_filters": sorted(
-            set(re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)) - {""}
-        )[:2],
+        "pushed": _listed("PushedFilters", plan),
+        "partition_filters": _listed("PartitionFilters", plan),
         "readschema": sorted(
             set(m[:100] for m in re.findall(r"ReadSchema: struct<([^>]*)", plan))
         )[:2],
